@@ -384,18 +384,31 @@ def test_q97_profile_uses_melt_not_wide_expand(spark):
 
 def test_q98_overlap_sizes_are_broadcast(spark):
     # Per-source set sizes attach as ONE 1-row source->count map
-    # cross-attach (round-13 fold; was two broadcast hash joins) — the
-    # keyless 1-row broadcast is the sanctioned idiom; no cartesian and
-    # no CONDITIONED nested-loop may appear.
-    plan = formatted_plan(spark, "q98_source_overlap")
-    assert "map_from_entries" in plan, plan
-    assert "CartesianProduct" not in plan
+    # cross-attach (round-13 fold; was two broadcast hash joins). That
+    # keyless attach is the ONLY nested-loop join allowed: exactly one
+    # BroadcastNestedLoopJoin, condition-free, whose broadcast build side
+    # carries nothing but the map — so corpus-sized shingle work can
+    # never be replanned as a nested loop. No cartesian either.
     import re
 
+    plan = formatted_plan(spark, "q98_source_overlap")
+    assert "CartesianProduct" not in plan
     bnlj = re.findall(
         r"\(\d+\) BroadcastNestedLoopJoin.*?(?=\n\(|\Z)", plan, re.S
     )
-    assert all("Join condition: None" in n for n in bnlj), plan
+    assert len(bnlj) == 1 and "Join condition: None" in bnlj[0], plan
+    # the build side is the tree child drawn with "+- " at the join's column
+    lines = plan.splitlines()
+    at = next(i for i, l in enumerate(lines) if " BroadcastNestedLoopJoin " in l)
+    col = lines[at].index("BroadcastNestedLoopJoin")
+    build = next(l for l in lines[at + 1 :] if l[col : col + 3] == "+- ")
+    node = re.search(r"BroadcastExchange \((\d+)\)", build)
+    assert node and "BuildRight" in lines[at], plan
+    detail = re.search(
+        rf"\({node.group(1)}\) BroadcastExchange\nInput \[1\]: \[(\w+)#", plan
+    )
+    assert detail and detail.group(1) == "smap", plan
+    assert "map_from_entries" in plan, plan
 
 
 def test_q96_psi_single_corpus_aggregate(spark):
@@ -481,6 +494,11 @@ def test_q106_sweep_has_no_inequality_join(spark):
     # The whole point: boundary deltas + per-day running sum, never the
     # O(n^2) active-at-instant inequality join the oracle uses.
     plan = formatted_plan(spark, "q106_session_concurrency")
+    # the user_id spread repartitions to defaultParallelism; it replaces
+    # the session exchange only when that equals the shuffle count
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
+        spark.sparkContext.defaultParallelism
+    )
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert ") Window" in plan

@@ -49,16 +49,13 @@ def test_load_idempotent():
     assert a.keys() == b.keys()
 
 
-def test_no_unhashable_column_types_in_registered_outputs():
+def test_no_unhashable_column_types_in_registered_outputs(spark):
     """The harness canonicalizer sorts result frames in pandas, where
     array/map/struct cells are unhashable (the round-2 q44 failure).
     Registered projections must serialize complex values (CSV/JSON);
     library forms may keep typed arrays."""
     from tests.conftest import SMOKE_SF_DIR
 
-    from trafficteach_spark.session import get_spark
-
-    spark = get_spark("registry-schema-audit")
     for key, fn in registry.queries().items():
         for name, dtype in fn(spark, SMOKE_SF_DIR).dtypes:
             assert not dtype.startswith(("array", "map", "struct")), (

@@ -99,12 +99,15 @@ def test_streaming_rollup_matches_batch_and_recovers(spark, tmp_path):
     q = start_incremental_rollup(spark, str(watch), str(state), ckpt)
     q.awaitTermination(120)
     _assert_same(_state_dict(spark, state), _batch_recompute(spark, ROWS_1))
+    # each micro-batch is read from the source once, not once per action
+    assert sum(p.numInputRows for p in q.recentProgress) == len(ROWS_1)
 
     # --- run 2: RESTART from the same checkpoint with a new file; the
     # merged state must cover both files (resumed, not recomputed) ---
     _drop_file(spark, tmp_path, watch, ROWS_2, "f2")
     q = start_incremental_rollup(spark, str(watch), str(state), ckpt)
     q.awaitTermination(120)
+    assert sum(p.numInputRows for p in q.recentProgress) == len(ROWS_2)
     _assert_same(
         _state_dict(spark, state), _batch_recompute(spark, ROWS_1 + ROWS_2)
     )

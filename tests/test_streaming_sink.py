@@ -250,6 +250,12 @@ def test_windowed_sink_full_lifecycle_exactly_once(spark, tmp_path):
     _drop_file(spark, tmp_path, watch, ROWS_WIN_A, "wf1")
     q = start_windowed_parquet_sink(spark, str(watch), table, ckpt)
     q.awaitTermination(120)
+    # the sink body evaluates each batch once: one state-store load and
+    # commit per shuffle partition, not one per action on the batch
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops and all(
+        op.numStateStoreInstances == op.numShufflePartitions for op in ops
+    ), [(op.numStateStoreInstances, op.numShufflePartitions) for op in ops]
     got1 = read_windowed_sink(spark, table).collect()
     assert got1, "no windows finalized after draining file A"
     keys1 = [_win_key(r) for r in got1]

@@ -2521,8 +2521,8 @@ def q141_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct("brand", "n_item"))
         ).alias("imap")
     )
-    n_ant = F.element_at("imap", F.col("antecedent"))
-    n_con = F.element_at("imap", F.col("consequent"))
+    n_ant = F.try_element_at("imap", F.col("antecedent"))
+    n_con = F.try_element_at("imap", F.col("consequent"))
     return (
         pair.crossJoin(F.broadcast(n))
         .crossJoin(F.broadcast(imap))
@@ -3923,20 +3923,10 @@ def q161_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand->count map; lift reads the map) — two broadcast-build jobs
     and one item aggregation per action instead of four and three.
     """
-    # Round-13 restructure (verdict item 3; guide §2.4): the PAIR level
-    # now expands row-locally with q141's sanctioned comparison-filter
-    # HOF (O(k^2) per basket, no nested slice allocations — the form
-    # that beat the join at BOTH scales for q141), so only ONE
-    # exchange-free self-join remains (pairs x flat for the third
-    # element, both sides ok-partitioned from the shared persisted
-    # basket frame) instead of two. The verdict's anti-monotone
-    # min-support prefilter was MEASURED AND REJECTED: the fixture's 25
-    # brands are uniform (min per-brand basket count 20 958 at sf0.1 vs
-    # a support threshold of 147), so the filter prunes zero rows at
-    # any SF of this generator — the volume cut had to come from the
-    # join structure instead. The three per-brand count broadcasts also
-    # fold into ONE 1-row map attach (plus the basket-count row): two
-    # broadcast builds per action instead of four (guide §5 jobs).
+    # An anti-monotone min-support prefilter was measured and rejected:
+    # the generator's 25 brands are uniform (min per-brand basket count
+    # 20 958 at sf0.1 vs a support threshold of 147), so it prunes zero
+    # rows.
     baskets = _brand_baskets(spark, sf_dir)
     flat = baskets.select("ok", F.explode("bs").alias("brand")).persist()
     # Basket count from the PERSISTED flat frame (every basket array is
@@ -3985,9 +3975,9 @@ def q161_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
             * nb
             * nb
             / (
-                F.element_at("imap", F.col("brand_a")).cast("double")
-                * F.element_at("imap", F.col("brand_b"))
-                * F.element_at("imap", F.col("brand_c"))
+                F.try_element_at("imap", F.col("brand_a")).cast("double")
+                * F.try_element_at("imap", F.col("brand_b"))
+                * F.try_element_at("imap", F.col("brand_c"))
             ),
             6,
         ).alias("lift"),

@@ -1241,8 +1241,8 @@ def q98_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("smap")
         )
     )
-    n_a = F.element_at("smap", F.col("src_a"))
-    n_b = F.element_at("smap", F.col("src_b"))
+    n_a = F.try_element_at("smap", F.col("src_a"))
+    n_b = F.try_element_at("smap", F.col("src_b"))
     return (
         by_shingle.select(
             F.explode(

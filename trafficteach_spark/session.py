@@ -128,16 +128,20 @@ def cache_scope(spark: SparkSession) -> Iterator[SparkSession]:
 def get_spark(app_name: str = "trafficteach-spark", cpus: int | None = None) -> SparkSession:
     """Local-mode session: ``local[$SPARK_GRAFT_CPUS]``, AQE on.
 
-    Shuffle partitions default to the core count — at cluster scale this
-    would be tuned to ~2-3x total cores (or left to AQE's initialPartitionNum
-    + coalescing), which is exactly what AQE does for us here.
+    Shuffle partitions equal the core count, so shuffles, the
+    ``spread_scan`` repartition (``defaultParallelism``) and streaming
+    state stores (which inherit the shuffle count; streaming runs without
+    AQE) all use one number — a restarted query keeps its checkpoint's
+    own count. At cluster scale this would be tuned to ~2-3x total cores
+    (or left to AQE's initialPartitionNum + coalescing), which is exactly
+    what AQE does for us here.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -30,6 +30,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from trafficteach_spark.operators.analytics import (
     _daily_partial,
@@ -120,12 +121,22 @@ def _checkpoint_lineage(checkpoint_dir: str) -> str:
         ) from exc
 
 
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A zero-row frame with ``schema``, planned entirely in the JVM.
+    ``spark.createDataFrame([], schema)`` parallelizes an empty local
+    list, so its first action starts Python-worker tasks — about a
+    second on the first micro-batch of every drain."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def read_rollup_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The committed rollup state (empty frame with the right schema
     before the first commit)."""
     _, path, _ = _latest(state_dir)
     if path is None:
-        return spark.createDataFrame([], ROLLUP_STATE_SCHEMA)
+        return _empty_frame(spark, StructType.fromDDL(ROLLUP_STATE_SCHEMA))
     return spark.read.schema(ROLLUP_STATE_SCHEMA).parquet(path)
 
 
@@ -216,7 +227,16 @@ def start_incremental_rollup(
             )
         if batch_id <= last_id:  # crash-replay of a committed batch
             return
-        if batch_df.isEmpty():
+        # The partial (one row per touched key) is the only thing read
+        # from the batch: materialized once, it feeds the emptiness test
+        # and both sides of the merge, so the source plan runs once per
+        # micro-batch instead of once per action.
+        partial = (
+            _daily_partial(batch_df)
+            .withColumn("n", F.col("n").cast("long"))
+            .localCheckpoint(eager=True)
+        )
+        if partial.isEmpty():
             # An empty micro-batch (file source with nothing new yet)
             # would still copy the WHOLE state table into a fresh
             # version dir — the full-rewrite cost this incremental store
@@ -224,16 +244,10 @@ def start_incremental_rollup(
             # replays the same empty data, and the batch-id guard above
             # only ever compares against COMMITTED ids.
             return
-        batch_spark = batch_df.sparkSession
-        partial = _daily_partial(batch_df).withColumn(
-            "n", F.col("n").cast("long")
-        )
-        base = read_rollup_state(batch_spark, state_dir)
-        # localCheckpoint: the merge plan reads the CURRENT state files
-        # and the commit writes a NEW version dir, so overwrite-read
-        # conflicts can't arise; materializing still keeps the commit
-        # from re-running the merge twice (write + any later action).
-        merged = merge_rollup_state(base, partial).localCheckpoint(eager=True)
+        base = read_rollup_state(batch_df.sparkSession, state_dir)
+        # The merge reads the CURRENT version dir and the commit writes a
+        # NEW one, so the write is the merge's only action.
+        merged = merge_rollup_state(base, partial)
         _commit(state_dir, batch_id, merged, lineage, prev_id=last_id)
 
     return (

@@ -28,6 +28,13 @@ with a FRESH checkpoint while the result table persists, so a bare
 replay-by-id would duplicate everything already written — the sink
 records the checkpoint's query id next to the table and fails loudly on
 a mismatch (see :func:`rollup._checkpoint_lineage`).
+
+A ``foreachBatch`` body receives the micro-batch as a frame over the
+incremental plan, and every action on it re-runs that plan: the source
+scan and, for the windowed sink, the stateful stage with its state-store
+loads and commits. A body that takes more than one action (an emptiness
+test, then a write) must materialize the batch once first —
+:func:`_write_nonempty`.
 """
 
 from __future__ import annotations
@@ -35,13 +42,14 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trafficteach_spark.sources.jdbc import write_jdbc
 from trafficteach_spark.streaming.demo import read_event_stream
-from trafficteach_spark.streaming.rollup import _checkpoint_lineage
+from trafficteach_spark.streaming.rollup import _checkpoint_lineage, _empty_frame
 
 
 def _lineage_guard(meta_dir: str, lineage: str) -> None:
@@ -83,12 +91,25 @@ def _read_batch_partitioned(spark: SparkSession, table_dir: str, schema) -> Data
     import glob as _glob
 
     if not _glob.glob(os.path.join(table_dir, "batch_id=*")):
-        return spark.createDataFrame([], schema)
+        return _empty_frame(spark, schema)
     return (
         spark.read.schema(schema)
         .option("basePath", table_dir)
         .parquet(os.path.join(table_dir, "batch_id=*"))
     )
+
+
+def _write_nonempty(batch_df: DataFrame, write: Callable[[DataFrame], None]) -> None:
+    """Run ``write`` on a non-empty micro-batch, evaluating the batch
+    once: it is persisted, so the emptiness test and the write share one
+    computation (each partition is cached whole by whichever action
+    reaches it first), and unpersisted when the body returns."""
+    batch_df.persist()
+    try:
+        if not batch_df.isEmpty():
+            write(batch_df)
+    finally:
+        batch_df.unpersist()
 
 
 def _make_partition_overwrite_batch(table_dir: str, checkpoint_dir: str):
@@ -103,11 +124,8 @@ def _make_partition_overwrite_batch(table_dir: str, checkpoint_dir: str):
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _lineage_guard(table_dir, _checkpoint_lineage(checkpoint_dir))
-        if batch_df.isEmpty():
-            return
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(table_dir, f"batch_id={batch_id}")
-        )
+        out = os.path.join(table_dir, f"batch_id={batch_id}")
+        _write_nonempty(batch_df, lambda df: df.write.mode("overwrite").parquet(out))
 
     return write_batch
 
@@ -298,28 +316,31 @@ def start_jdbc_append_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _lineage_guard(meta_dir, _checkpoint_lineage(checkpoint_dir))
-        if batch_df.isEmpty():
-            return
-        batch_spark = batch_df.sparkSession
-        # batch_id quoted with the TARGET engine's quote string: Spark's
-        # JDBC writer creates case-sensitive quoted column identifiers,
-        # so the bare name would fold into a different (missing) column
-        # on Derby/Postgres — and a hardcoded '"' would be a string
-        # LITERAL on default-config MySQL (see _quote_ident).
-        bid = quoted.get("batch_id")
-        if bid is None:
-            bid = quoted["batch_id"] = _quote_ident(batch_spark, url, "batch_id")
-        _jdbc_execute(
-            batch_spark,
-            url,
-            f"DELETE FROM {table} WHERE {bid} = {int(batch_id)}",
-        )
-        write_jdbc(
-            batch_df.withColumn("batch_id", F.lit(int(batch_id))),
-            url,
-            table,
-            mode="append",
-        )
+
+        def replace_batch(df: DataFrame) -> None:
+            batch_spark = df.sparkSession
+            # batch_id quoted with the TARGET engine's quote string:
+            # Spark's JDBC writer creates case-sensitive quoted column
+            # identifiers, so the bare name would fold into a different
+            # (missing) column on Derby/Postgres — and a hardcoded '"'
+            # would be a string LITERAL on default-config MySQL (see
+            # _quote_ident).
+            bid = quoted.get("batch_id")
+            if bid is None:
+                bid = quoted["batch_id"] = _quote_ident(batch_spark, url, "batch_id")
+            _jdbc_execute(
+                batch_spark,
+                url,
+                f"DELETE FROM {table} WHERE {bid} = {int(batch_id)}",
+            )
+            write_jdbc(
+                df.withColumn("batch_id", F.lit(int(batch_id))),
+                url,
+                table,
+                mode="append",
+            )
+
+        _write_nonempty(batch_df, replace_batch)
 
     return (
         read_event_stream(spark, source_dir)
