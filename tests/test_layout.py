@@ -347,5 +347,40 @@ def test_scan_file_count_survives_concurrent_delete(tmp_path, monkeypatch):
         return real_stat(path, *a, **kw)
 
     monkeypatch.setattr(t.os, "stat", flaky_stat)
-    t._SCAN_FILES_CACHE.pop(str(root), None)
     assert t._scan_file_count(str(tmp_path / "sf"), "tbl") == 1 << 30
+
+
+def test_nested_part_rewrite_changes_every_listing(tmp_path):
+    """One part-file listing answers "did this table change?" for the
+    loader, the spread guard and the dedup memo key. On a date-partitioned
+    table, rewriting a nested part file in place (the partition and root
+    directory mtimes do not move) must change both the listing stamp and
+    the dedup fingerprint, and a new nested part must change the scan
+    file count. No Spark session: this is stat-only."""
+    import os
+
+    from trafficteach_spark.operators.llm.dedup import _dataset_fingerprint
+    from trafficteach_spark.sources.tables import _scan_file_count, part_file_stamp
+
+    sf = tmp_path / "sf"
+    part_dir = sf / "documents.parquet" / "date=2024-01-01"
+    part_dir.mkdir(parents=True)
+    part = part_dir / "part-0.parquet"
+    part.write_bytes(b"x")
+    (part_dir / "_SUCCESS").write_bytes(b"")
+    (part_dir / "part-empty.parquet").write_bytes(b"")
+
+    root = str(sf / "documents.parquet")
+    stamp, fp = part_file_stamp(root), _dataset_fingerprint(str(sf))
+    assert [name for name, _, _ in stamp] == ["date=2024-01-01/part-0.parquet"]
+    assert _scan_file_count(str(sf), "documents") == 1
+
+    dir_mtimes = [os.stat(d).st_mtime_ns for d in (root, part_dir)]
+    part.write_bytes(b"yy")
+    os.utime(part, ns=(stamp[0][2] + 10**9, stamp[0][2] + 10**9))
+    assert [os.stat(d).st_mtime_ns for d in (root, part_dir)] == dir_mtimes
+    assert part_file_stamp(root) != stamp
+    assert _dataset_fingerprint(str(sf)) != fp
+
+    (part_dir / "part-1.parquet").write_bytes(b"z")
+    assert _scan_file_count(str(sf), "documents") == 2

@@ -20,6 +20,8 @@ def test_oracle_keys_subset_of_queries():
     # deterministic given the literal hyperplanes / fixed-centroid rule);
     # what remains rows-only is genuinely engine-internal: HLL estimates
     # and the xxhash64-based simhash (whose md5 twin IS oracle-checked).
+    # tools/parity.py reports exactly these as rows-only; a key that
+    # silently loses its oracle fails here.
     no_oracle = set(qs) - set(oracles)
     assert no_oracle == {
         "q10_distinct_users_approx",
@@ -189,40 +191,16 @@ def test_digest_module_imports_standalone():
     assert proc.returncode == 0, proc.stderr[-2000:]
 
 
-def test_close_round_capstone_check_is_strict():
-    """check_capstone must fail a round with no BASELINE capstone section
-    and pass the CURRENT round (whose binding capstone must always match
-    the live registry's timed-key count — r8's 194-vs-206 undercount is
-    the bug class this guards). The current round comes from the
-    OPERATORS.md ledger header, NOT a hardcoded round number: historical
-    capstones record the registry as it was and must not be re-validated
-    against a registry that has since grown (round-10 review finding)."""
+def test_operators_ledger_matches_driver_order():
+    """The OPERATORS.md evidence ledger must agree with the registry:
+    exactly the DRIVER_ORDER keys are flagged ``yes`` in its "In rNN
+    window" column, and every registered key has a ledger row."""
+    import os
     import re
 
-    from tools.close_round import check_capstone
-
-    assert check_capstone(999), "a missing capstone section must be reported"
-    ledger = open("OPERATORS.md").read()
-    cur = int(re.search(r"\| Key \| Driver-hash rounds \| In r(\d+) window \|", ledger).group(1))
-    assert check_capstone(cur) == []
-
-
-def test_close_round_ledger_check_is_green_and_strict():
-    """tools/close_round.check_ledger must pass on the CURRENT repo (the
-    ledger 'In rNN window' column agrees with DRIVER_ORDER and every
-    registered key has a row) and must FAIL on a wrong round number —
-    the staleness guard the round-6/7 ledgers needed."""
-    import re
-
-    from tools.close_round import ROWS_ONLY_OK, check_ledger
-
-    ledger = open("OPERATORS.md").read()
-    n = int(re.search(r"\| Key \| Driver-hash rounds \| In r(\d+) window \|", ledger).group(1))
-    assert check_ledger(n) == []
-    assert check_ledger(n - 1), "a stale round number must be reported"
-    # The closing sweep's allowed rows-only set must match the registry's
-    # actual no-oracle keys — a key silently losing its oracle fails the
-    # sweep, a new deliberate sketch key must be added in BOTH places.
-    qs = registry.queries()
-    oracles = registry.oracle_sql()
-    assert set(qs) - set(oracles) == ROWS_ONLY_OK
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "OPERATORS.md")
+    src = open(path, encoding="utf-8").read()
+    assert re.search(r"\| Key \| Driver-hash rounds \| In r\d+ window \|", src)
+    rows = re.findall(r"^\| (q\S+) \| .*? \| (yes|no) \|$", src, re.M)
+    assert {k for k, flag in rows if flag == "yes"} == set(registry.DRIVER_ORDER)
+    assert set(registry.all_specs()) <= {k for k, _ in rows}

@@ -1,11 +1,9 @@
-"""Per-key Spark JOB counter (round-10 verdict item 3).
+"""Per-key Spark JOB counter.
 
-The round-10 reboot forensics showed that on some boots the per-job
-scheduler round-trip dominates small multi-job keys: their wall time
-follows ``drift_floor`` (bench.py), not scan throughput. This tool
-measures the lever directly — how many jobs one execution of a query
-submits — so "merge probes into fewer passes" work has a before/after
-number instead of a guess.
+On small multi-job keys the per-job scheduler round-trip, not scan
+throughput, dominates wall time. This tool measures that lever directly
+— how many jobs one execution of a query submits — so "merge probes
+into fewer passes" work has a before/after number instead of a guess.
 
 Usage::
 
@@ -27,9 +25,13 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from bench import _force  # noqa: E402 - the bench's noop-sink forcer
 from trafficteach_spark import registry  # noqa: E402
 from trafficteach_spark.session import cache_scope, get_spark  # noqa: E402
+
+
+def _force(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
 
 DEFAULT_KEYS = (
     "q104_fk_audit",

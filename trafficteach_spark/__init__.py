@@ -23,7 +23,7 @@ Package layout (SURVEY.md §8):
     streaming/    Structured Streaming twins of the batch aggregations
     registry.py   query-key -> (fn, oracle SQL) registry for the harness
 (plan inspection / shuffle audit tooling lives in tools/plan_audit.py
-at the repo root, alongside tools/parity.py and tools/scale_probe.py)
+at the repo root, alongside tools/parity.py)
 
 Reusable library entry points beyond the registered queries
 (each tested in tests/, with its scale contract in the docstring):

@@ -27,7 +27,7 @@ from trafficteach_spark.functions.exprs import (
     md5_prefix_int_spark,
 )
 from trafficteach_spark.registry import register
-from trafficteach_spark.sources.tables import load_table, spread_scan
+from trafficteach_spark.sources.tables import load_table, part_file_stamp, spread_scan
 
 # Word 3-gram shingles: with the fixture's 31-word vocabulary, token *sets*
 # are degenerate (random-pair median Jaccard 0.64) while shingle sets
@@ -115,32 +115,23 @@ _EVAL_HASHED_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _dataset_fingerprint(sf_dir: str) -> str:
-    """(name, size, mtime_ns) digest of the documents table's part
-    files — the memo/ledger key component that detects an IN-PLACE
-    rewrite of the dataset at the same path. (app, sf_dir) alone kept
-    serving the localCheckpoint'ed pair/cluster frames of the OLD
-    corpus after a rewrite, while non-memoized operators and every
+    """Digest of the documents table's :func:`part_file_stamp` — the
+    memo/ledger key component that detects an IN-PLACE rewrite of the
+    dataset at the same path, nested partitions included. (app, sf_dir)
+    alone kept serving the localCheckpoint'ed pair/cluster frames of the
+    OLD corpus after a rewrite, while non-memoized operators and every
     DuckDB oracle read the new files — silently inconsistent results
-    within one app (round-12 review finding; the same defense the
-    loader's events-encoding probe uses). stat-only, no file reads, so
-    the access path stays microseconds."""
-    import glob as _glob
+    within one app (round-12 review finding). stat-only, no file reads,
+    so the access path stays microseconds. A missing table digests as
+    empty: its load raises Spark's own PATH_NOT_FOUND."""
     import hashlib
     import os
 
-    root = os.path.join(sf_dir, "documents.parquet")
-    paths = (
-        [root]
-        if os.path.isfile(root)
-        else sorted(_glob.glob(os.path.join(root, "*.parquet")))
-    )
-    h = hashlib.md5()
-    for p in paths:
-        st = os.stat(p)
-        h.update(
-            f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns};".encode()
-        )
-    return h.hexdigest()[:16]
+    try:
+        stamp = part_file_stamp(os.path.join(sf_dir, "documents.parquet"))
+    except FileNotFoundError:
+        stamp = ()
+    return hashlib.md5(repr(stamp).encode()).hexdigest()[:16]
 
 
 def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:

@@ -34,7 +34,7 @@ frame — every case where two subplans share no exchange and would
 otherwise recompute a dominant scan). The returned
 DataFrame is lazy, so the query function cannot unpersist it; long-lived
 sessions running many queries should call ``spark.catalog.clearCache()``
-between queries (bench.py and the plan tests do) — Spark's LRU eviction
+between queries (perfbench and the plan tests do) — Spark's LRU eviction
 bounds the cost otherwise. Separately, the dedup chain maintains a
 MATERIALIZED layer (``operators/llm/dedup.py``: localCheckpoint'ed pair
 and cluster frames, one per (application, sf_dir)) that clearCache()

@@ -94,8 +94,8 @@ def cache_scope(spark: SparkSession) -> Iterator[SparkSession]:
     unpersist): everything cached inside the ``with`` block is dropped on
     exit via ``spark.catalog.clearCache()``, so a harness cannot
     accumulate query-local persists across many queries by forgetting the
-    manual call. bench.py, tools/parity.py and the plan tests run every
-    query inside this scope.
+    manual call. perfbench and tools/parity.py run every query inside
+    this scope.
 
     The dedup chain's MATERIALIZED pair/cluster layer (localCheckpoint
     blocks, see operators/llm/dedup.py) is deliberately unaffected —

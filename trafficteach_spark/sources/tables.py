@@ -29,7 +29,39 @@ from trafficteach_spark.functions.exprs import ns_long_to_ntz_us
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# path -> (part-file (name, size, mtime_ns) fingerprint, encoding verdict)
+def part_file_stamp(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(relpath, size, mtime_ns)`` of every part file Spark would read
+    at *path*, sorted — the one answer to "did this table change?".
+
+    Keyed on the part files themselves, not the directory mtime: POSIX
+    only bumps a dir's mtime on entry add/remove/rename, so an IN-PLACE
+    part rewrite — or any change below a nested ``date=YYYY-MM-DD/``
+    partition — would otherwise go unseen. The walk is recursive and
+    mirrors Spark's file-index visibility rules: hidden paths (any
+    basename starting with ``_`` or ``.``, e.g. an aborted write's
+    ``_temporary/`` or ``.crc`` files) are skipped, and so are zero-byte
+    part files (a crashed writer), which plan no splits. A plain file is
+    its own single part. stat-only, no file reads. Raises
+    FileNotFoundError when *path* is missing or a part vanishes mid-walk
+    (a concurrent writer); each caller picks its own policy for that.
+    """
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    stamp = []
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for fname in files:
+            if fname.startswith(("_", ".")) or not fname.endswith(".parquet"):
+                continue
+            full = os.path.join(dirpath, fname)
+            st = os.stat(full)
+            if st.st_size > 0:
+                stamp.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamp))
+
+
+# path -> (part_file_stamp, encoding verdict)
 _EVENTS_TS_KIND_CACHE: dict[str, tuple[tuple, str]] = {}
 
 
@@ -49,14 +81,12 @@ def _events_ts_kind(path: str) -> str:
     of serving the stale verdict; footer reads amortize to one per file
     per job, not per partition.
     """
-    # Cache key = fingerprint of the part files themselves (name, size,
-    # mtime_ns), not the directory mtime: POSIX only bumps a dir's mtime
-    # on entry add/remove/rename, so an IN-PLACE part-file rewrite with
-    # the other encoding would otherwise serve the stale verdict and
-    # skip the mixed-encoding guard (round-6 review finding).
-    # Local-filesystem probe by design (pyarrow footer reads): a remote
-    # URI (s3://, hdfs://) fails here with a clear message — a real
-    # deployment enforces one encoding at write time instead of probing.
+    # Cache key = part_file_stamp, so an IN-PLACE part-file rewrite with
+    # the other encoding re-probes instead of skipping the mixed-encoding
+    # guard (round-6 review finding). Local-filesystem probe by design
+    # (pyarrow footer reads): a remote URI (s3://, hdfs://) fails here
+    # with a clear message — a real deployment enforces one encoding at
+    # write time instead of probing.
     if "://" in path:
         raise ValueError(
             f"events encoding probe needs a local path, got {path!r}: "
@@ -64,40 +94,7 @@ def _events_ts_kind(path: str) -> str:
             "time (see _events_ts_kind docstring)"
         )
     try:
-        if os.path.isdir(path):
-            # RECURSIVE walk, not a top-level scandir: the recommended
-            # fact layout is date-partitioned (.../date=YYYY-MM-DD/
-            # part-*.parquet), whose parquet files all live one level
-            # down — the flat listing found none and raised on a layout
-            # Spark reads fine (round-10 review finding). Paths are
-            # stamped relative so the cache key stays stable.
-            # Mirror Spark's own file-index visibility rules, or the
-            # probe rejects directories Spark reads fine (round-12
-            # review finding): hidden paths — any basename starting
-            # with '_' or '.' (an aborted write's _temporary/ leftovers,
-            # .crc files) — are invisible to Spark's listing, and
-            # zero-byte part files (a crashed writer) plan no splits,
-            # so neither may enter the stamp or the footer probes
-            # (pyarrow raises raw ArrowInvalid on both).
-            stamp_list = []
-            for dirpath, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for fname in files:
-                    if fname.startswith(("_", ".")) or not fname.endswith(
-                        ".parquet"
-                    ):
-                        continue
-                    full = os.path.join(dirpath, fname)
-                    st = os.stat(full)
-                    if st.st_size == 0:
-                        continue
-                    stamp_list.append(
-                        (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
-                    )
-            stamp = tuple(sorted(stamp_list))
-        else:
-            st = os.stat(path)
-            stamp = ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        stamp = part_file_stamp(path)
     except FileNotFoundError:
         raise FileNotFoundError(f"no parquet at {path}") from None
     cached = _EVENTS_TS_KIND_CACHE.get(path)
@@ -108,7 +105,7 @@ def _events_ts_kind(path: str) -> str:
 
     probes = [path]
     if os.path.isdir(path):
-        # Probe EVERY part file, derived from the same scandir stamp (one
+        # Probe EVERY part file, derived from the same stamp (one
         # directory listing; the probed set and the cached fingerprint are
         # atomically consistent). The earlier head+tail sample defeated
         # the in-place-rewrite guard this cache exists for: a MIDDLE part
@@ -254,10 +251,6 @@ def load_events_range(spark: SparkSession, sf_dir: str, start: str, end: str) ->
 # splits, so at production scale (thousands of row groups per table) this
 # is a structural no-op, not a tuning constant.
 
-# path -> (mtime_ns-stamped) part-file count; same caching idea as the
-# events-encoding probe but only the COUNT is needed here.
-_SCAN_FILES_CACHE: dict[str, tuple[int, int]] = {}
-
 
 def _scan_file_count(sf_dir: str, name: str) -> int:
     """Number of non-hidden, non-empty part files behind a table — the
@@ -265,46 +258,17 @@ def _scan_file_count(sf_dir: str, name: str) -> int:
     lower bound in general: more row groups only add splits). Remote
     URIs return a large count (never spread what we cannot cheaply
     stat; a remote deployment's tables are multi-file by construction).
-
-    Staleness contract (round-13 advice): the cache key is the ROOT
-    directory's mtime, which does not change when files inside nested
-    subdirectories are rewritten — the cached count can go stale on a
-    partitioned table mutated in place. Accepted deliberately: the count
-    only gates an optimization (spread vs no-spread), never correctness,
-    and the stale direction at scale (count stays high) is the safe
-    no-op. A part file vanishing mid-walk (concurrent writer) likewise
-    degrades to "don't spread" rather than crashing the query build."""
+    A missing table, or a part file vanishing mid-walk (concurrent
+    writer), likewise degrades to "don't spread" rather than crashing
+    the query build: a table being mutated under us is exactly one we
+    should not spread."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if "://" in path:
         return 1 << 30
     try:
-        st_root = os.stat(path)
-    except FileNotFoundError:
+        return len(part_file_stamp(path))
+    except OSError:
         return 1 << 30
-    key_stamp = st_root.st_mtime_ns
-    cached = _SCAN_FILES_CACHE.get(path)
-    if cached is not None and cached[0] == key_stamp:
-        return cached[1]
-    if os.path.isdir(path):
-        n = 0
-        for dirpath, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for fname in files:
-                if fname.startswith(("_", ".")) or not fname.endswith(".parquet"):
-                    continue
-                try:
-                    if os.stat(os.path.join(dirpath, fname)).st_size > 0:
-                        n += 1
-                except OSError:
-                    # A writer rewriting the table can delete a part
-                    # file between listing and stat: a table being
-                    # mutated under us is exactly one we should not
-                    # spread — return the no-spread sentinel, uncached.
-                    return 1 << 30
-    else:
-        n = 1
-    _SCAN_FILES_CACHE[path] = (key_stamp, n)
-    return n
 
 
 def spread_scan(
