@@ -22,6 +22,7 @@ from __future__ import annotations
 import pytest
 
 from trafficteach_spark.operators.llm import dedup
+from trafficteach_spark.session import cache_scope
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
@@ -30,10 +31,13 @@ SF_MED = "/root/testdata/sf0.01"
 @pytest.fixture(autouse=True)
 def clean_layer(spark):
     """Each test starts and ends with an empty layer (eviction is safe
-    by construction — the frames rebuild on next access)."""
+    by construction — the frames rebuild on next access), and runs inside
+    cache_scope: a re-persisted shingle frame is a catalog cache entry
+    that would otherwise outlive the test."""
     for key in list(dedup._LAYER_LEDGER):
         dedup._evict_layer_entry(spark, key)
-    yield
+    with cache_scope(spark):
+        yield
     for key in list(dedup._LAYER_LEDGER):
         dedup._evict_layer_entry(spark, key)
 

@@ -14,8 +14,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from trafficteach_spark.registry import queries
+from trafficteach_spark.session import cache_scope
 
 Q = queries()
+
+
+@pytest.fixture(autouse=True)
+def _scoped_cache(spark):
+    """Queries and operator memos here may persist frames in the shared
+    session (the registry's caching contract: the caller scopes them), so
+    each test runs inside cache_scope and none outlives its test."""
+    with cache_scope(spark):
+        yield
 
 
 def rows(spark, sf_dir, key):

@@ -499,6 +499,8 @@ def test_q106_sweep_has_no_inequality_join(spark):
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
         spark.sparkContext.defaultParallelism
     )
+    # the same get_spark session builds plans without per-call origin capture
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert ") Window" in plan

@@ -21,9 +21,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from trafficteach_spark import schemas
-from trafficteach_spark.session import ensure_session_confs
+from trafficteach_spark.session import ensure_session_confs, evict_stale_memo
 from trafficteach_spark.functions.exprs import ns_long_to_ntz_us
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,7 +66,25 @@ def part_file_stamp(path: str) -> tuple[tuple[str, int, int], ...]:
 _EVENTS_TS_KIND_CACHE: dict[str, tuple[tuple, str]] = {}
 
 
-def _events_ts_kind(path: str) -> str:
+def _events_stamp(path: str) -> tuple[tuple[str, int, int], ...]:
+    """:func:`part_file_stamp` of the events table, with the encoding
+    probe's error policy. Local-filesystem probe by design (pyarrow
+    footer reads): a remote URI (s3://, hdfs://) fails here with a clear
+    message — a real deployment enforces one encoding at write time
+    instead of probing."""
+    if "://" in path:
+        raise ValueError(
+            f"events encoding probe needs a local path, got {path!r}: "
+            "remote datasets must commit to one ts encoding at write "
+            "time (see _events_ts_kind docstring)"
+        )
+    try:
+        return part_file_stamp(path)
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no parquet at {path}") from None
+
+
+def _events_ts_kind(path: str, stamp: tuple | None = None) -> str:
     """Physical encoding of ``events.ts`` at *path*: ``"int64_ns"`` (parquet
     TIMESTAMP(NANOS), which Spark 4 can only read as a raw long) or
     ``"timestamp"`` (plain TIMESTAMP_MICROS, readable natively as NTZ).
@@ -79,24 +98,14 @@ def _events_ts_kind(path: str) -> str:
     part). Cached per path keyed on the part files' (name, size, mtime)
     fingerprint, so any rewrite — including in-place — re-probes instead
     of serving the stale verdict; footer reads amortize to one per file
-    per job, not per partition.
+    per job, not per partition. *stamp* is the caller's
+    :func:`_events_stamp` of *path*, if it already has one.
     """
     # Cache key = part_file_stamp, so an IN-PLACE part-file rewrite with
     # the other encoding re-probes instead of skipping the mixed-encoding
-    # guard (round-6 review finding). Local-filesystem probe by design
-    # (pyarrow footer reads): a remote URI (s3://, hdfs://) fails here
-    # with a clear message — a real deployment enforces one encoding at
-    # write time instead of probing.
-    if "://" in path:
-        raise ValueError(
-            f"events encoding probe needs a local path, got {path!r}: "
-            "remote datasets must commit to one ts encoding at write "
-            "time (see _events_ts_kind docstring)"
-        )
-    try:
-        stamp = part_file_stamp(path)
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no parquet at {path}") from None
+    # guard (round-6 review finding).
+    if stamp is None:
+        stamp = _events_stamp(path)
     cached = _EVENTS_TS_KIND_CACHE.get(path)
     if cached is not None and cached[0] == stamp:
         return cached[1]
@@ -143,6 +152,50 @@ def _events_ts_kind(path: str) -> str:
     return kind
 
 
+# (applicationId, session, path, schema) -> (part_file_stamp, frame)
+_BASE_FRAMES: dict[tuple, tuple[tuple, DataFrame]] = {}
+
+
+def _read_parquet(
+    spark: SparkSession, path: str, schema: StructType, stamp: tuple | None = None
+) -> DataFrame:
+    """``spark.read.schema(schema).parquet(path)``, reused while *path*'s
+    part files are unchanged.
+
+    Each read lists the files and resolves the relation on the driver:
+    dozens of py4j round trips per table, paid by every query build.
+    DataFrames are immutable, so one frame per (session, path, schema)
+    serves every query until :func:`part_file_stamp` changes — which any
+    rewrite does, in place or under a nested ``date=`` partition — and
+    the table is re-read. The stamp is taken before the read, so a frame
+    is never older than its stamp. Keyed on the session object itself, so
+    a ``spark.newSession()`` never receives another session's frame;
+    entries of another application are evicted. A path that cannot be
+    stamped (missing table, a part vanishing mid-walk, a remote URI) is
+    read directly, so Spark raises or lists as it always did.
+    """
+    if stamp is None:
+        try:
+            stamp = part_file_stamp(path)
+        except OSError:
+            return spark.read.schema(schema).parquet(path)
+    key = (evict_stale_memo(_BASE_FRAMES, spark), spark, path, schema)
+    hit = _BASE_FRAMES.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    df = spark.read.schema(schema).parquet(path)
+    _BASE_FRAMES[key] = (stamp, df)
+    return df
+
+
+def _events_base(spark: SparkSession, path: str) -> tuple[str, DataFrame]:
+    """``(ts encoding, raw events frame)`` at *path*, from one stamp."""
+    stamp = _events_stamp(path)
+    kind = _events_ts_kind(path, stamp)
+    schema = schemas.EVENTS_PHYSICAL if kind == "int64_ns" else schemas.EVENTS
+    return kind, _read_parquet(spark, path, schema, stamp)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table with its declared schema; normalize physical quirks.
 
@@ -157,14 +210,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {schemas.TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        if _events_ts_kind(path) == "int64_ns":
-            df = spark.read.schema(schemas.EVENTS_PHYSICAL).parquet(path)
-            return df.withColumn(
-                "ts", ns_long_to_ntz_us("ts")
-            )
-        return spark.read.schema(schemas.EVENTS).parquet(path)
-    df = spark.read.schema(schemas.READ_SCHEMAS[name]).parquet(path)
-    return df
+        kind, df = _events_base(spark, path)
+        return df.withColumn("ts", ns_long_to_ntz_us("ts")) if kind == "int64_ns" else df
+    return _read_parquet(spark, path, schemas.READ_SCHEMAS[name])
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -222,9 +270,8 @@ def load_events_range(spark: SparkSession, sf_dir: str, start: str, end: str) ->
     pushdown-eligible, so it is applied directly.
     """
     ensure_session_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    if _events_ts_kind(path) == "int64_ns":
-        df = spark.read.schema(schemas.EVENTS_PHYSICAL).parquet(path)
+    kind, df = _events_base(spark, os.path.join(sf_dir, "events.parquet"))
+    if kind == "int64_ns":
         df = df.where(
             (F.col("ts") >= F.lit(_ts_to_ns_bound(start)))
             & (F.col("ts") < F.lit(_ts_to_ns_bound(end)))
@@ -232,7 +279,6 @@ def load_events_range(spark: SparkSession, sf_dir: str, start: str, end: str) ->
         return df.withColumn(
             "ts", ns_long_to_ntz_us("ts")
         )
-    df = spark.read.schema(schemas.EVENTS).parquet(path)
     start_lit = F.expr(f"TIMESTAMP_NTZ '{_ts_norm(start)}'")
     end_lit = F.expr(f"TIMESTAMP_NTZ '{_ts_norm(end)}'")
     return df.where((F.col("ts") >= start_lit) & (F.col("ts") < end_lit))
