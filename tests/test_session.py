@@ -3,13 +3,18 @@ apply, and the loader's base-table memo."""
 
 from __future__ import annotations
 
+import gc
 import time
+import weakref
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from trafficteach_spark.session import driver_mem_for_host, ensure_session_confs
+from trafficteach_spark.sources import tables
 from trafficteach_spark.sources.tables import load_table
 
 TZ = "spark.sql.session.timeZone"
@@ -83,3 +88,37 @@ def test_new_session_gets_its_own_frame_and_confs(spark, tmp_path):
     assert other.conf.get(TZ) == "UTC"
     assert other.conf.get(MAX_FIELDS) == "300"
     assert _keys(theirs) == [3]
+
+
+def test_self_join_of_two_loads_needs_aliases(spark, tmp_path):
+    _write_region(tmp_path / "region.parquet", [0, 1, 2])
+    a = load_table(spark, str(tmp_path), "region")
+    b = load_table(spark, str(tmp_path), "region")
+    assert a is b  # one lineage, so each side must be aliased
+    with pytest.raises(AnalysisException, match="ambiguous"):
+        a.join(b, a.r_regionkey < b.r_regionkey).collect()
+    pairs = a.alias("l").join(b.alias("r"), F.col("l.r_regionkey") < F.col("r.r_regionkey"))
+    got = sorted((r[0], r[1]) for r in pairs.select("l.r_regionkey", "r.r_regionkey").collect())
+    assert got == [(0, 1), (0, 2), (1, 2)]
+
+
+def test_memo_keeps_the_newest_paths_and_frees_dropped_sessions(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "_BASE_FRAMES_PER_SESSION", 2)
+    dirs = [tmp_path / f"d{i}" for i in range(3)]
+    for i, d in enumerate(dirs):
+        d.mkdir()
+        _write_region(d / "region.parquet", [i])
+    first = load_table(spark, str(dirs[0]), "region")
+    for d in dirs[1:]:
+        load_table(spark, str(d), "region")
+    assert load_table(spark, str(dirs[0]), "region") is not first  # the oldest was dropped
+
+    def load_in_new_session():
+        s = spark.newSession()
+        load_table(s, str(dirs[0]), "region")
+        return weakref.ref(s)
+
+    gone = load_in_new_session()
+    spark.newSession()  # PySpark's RDD.toDF patch holds on to the newest session
+    gc.collect()
+    assert gone() is None

@@ -213,7 +213,7 @@ def get_spark(app_name: str = "trafficteach-spark", cpus: int | None = None) -> 
     return ensure_session_confs(builder.getOrCreate())
 
 
-def evict_stale_memo(memo: dict, spark: SparkSession) -> str:
+def evict_stale_memo(memo: dict, spark: SparkSession) -> None:
     """Drop memoized frames belonging to a DIFFERENT Spark application.
 
     The operator-level materialized layers (dedup's shingle/pair/cluster
@@ -225,10 +225,8 @@ def evict_stale_memo(memo: dict, spark: SparkSession) -> str:
     entries are re-buildable by construction, so eviction is always
     safe. Called by every memo accessor; current-app entries (any
     sf_dir) are kept — per-dataset growth within one app is bounded by
-    the handful of sf_dirs a process touches. Returns the live
-    application id, for the caller's own key.
+    the handful of sf_dirs a process touches.
     """
     app = spark.sparkContext.applicationId
     for key in [k for k in memo if k[0] != app]:
         del memo[key]
-    return app

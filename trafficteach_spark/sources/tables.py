@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from trafficteach_spark import schemas
-from trafficteach_spark.session import ensure_session_confs, evict_stale_memo
+from trafficteach_spark.session import ensure_session_confs
 from trafficteach_spark.functions.exprs import ns_long_to_ntz_us
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -152,8 +152,10 @@ def _events_ts_kind(path: str, stamp: tuple | None = None) -> str:
     return kind
 
 
-# (applicationId, session, path, schema) -> (part_file_stamp, frame)
-_BASE_FRAMES: dict[tuple, tuple[tuple, DataFrame]] = {}
+# Base-table frames a session keeps, oldest dropped first: every table of
+# a few datasets, while a process that walks many datasets (a new corpus
+# shard per pass) does not pin a Dataset and file index for each of them.
+_BASE_FRAMES_PER_SESSION = 32
 
 
 def _read_parquet(
@@ -163,28 +165,35 @@ def _read_parquet(
     part files are unchanged.
 
     Each read lists the files and resolves the relation on the driver:
-    dozens of py4j round trips per table, paid by every query build.
-    DataFrames are immutable, so one frame per (session, path, schema)
-    serves every query until :func:`part_file_stamp` changes — which any
-    rewrite does, in place or under a nested ``date=`` partition — and
-    the table is re-read. The stamp is taken before the read, so a frame
-    is never older than its stamp. Keyed on the session object itself, so
-    a ``spark.newSession()`` never receives another session's frame;
-    entries of another application are evicted. A path that cannot be
-    stamped (missing table, a part vanishing mid-walk, a remote URI) is
-    read directly, so Spark raises or lists as it always did.
+    dozens of py4j round trips per table, paid by every query build. So
+    one frame per (session, path) serves every query until
+    :func:`part_file_stamp` changes — which any rewrite does, in place or
+    under a nested ``date=`` partition — and the table is re-read. The
+    schema follows from the path (its table name, and for events the
+    encoding, which cannot change without the stamp changing). The stamp
+    is taken before the read, so a frame is never older than its stamp.
+
+    The memo lives on the session object: a ``spark.newSession()`` never
+    receives another session's frame, and the frames go when their
+    session does. (A module-level weak map would not free them, since
+    every frame holds its session.) A path that cannot be stamped
+    (missing table, a part vanishing mid-walk, a remote URI) is read
+    directly, so Spark raises or lists as it always did.
     """
     if stamp is None:
         try:
             stamp = part_file_stamp(path)
         except OSError:
             return spark.read.schema(schema).parquet(path)
-    key = (evict_stale_memo(_BASE_FRAMES, spark), spark, path, schema)
-    hit = _BASE_FRAMES.get(key)
+    memo = spark.__dict__.setdefault("_trafficteach_base_frames", {})
+    hit = memo.get(path)
     if hit is not None and hit[0] == stamp:
         return hit[1]
     df = spark.read.schema(schema).parquet(path)
-    _BASE_FRAMES[key] = (stamp, df)
+    memo.pop(path, None)
+    memo[path] = (stamp, df)
+    while len(memo) > _BASE_FRAMES_PER_SESSION:
+        del memo[next(iter(memo))]
     return df
 
 
@@ -204,6 +213,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``schemas.EVENTS`` shape — a microsecond TIMESTAMP_NTZ ``ts``. The
     int64-ns form is converted with integer division — `ts div 1000` —
     which matches DuckDB's ns->us truncation exactly.
+
+    Repeated calls on an unchanged table share one base relation (see
+    :func:`_read_parquet`), so their columns carry the same attribute ids
+    — as two frames derived from one ``spark.read`` would. A self-join
+    of two such loads must ``.alias()`` each side and name its columns
+    through the aliases; an unaliased condition such as ``a.x < b.x``
+    fails with Spark's ambiguous-column AnalysisException.
     """
     ensure_session_confs(spark)
     if name not in schemas.READ_SCHEMAS:
