@@ -33,7 +33,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2/§3."""
+    """One entry per implemented operator from SURVEY.md §2/§3.
+
+    Repeated calls of one key on the same session and unchanged inputs
+    may return DataFrames over one plan, so a join of two results of one
+    key must ``.alias()`` both sides, as ``load_table`` says for two
+    loads of one table."""
     return registry.queries()
 
 

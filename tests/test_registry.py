@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import time
+
+import pytest
+
 import __spark_entry__ as entry_mod
 from trafficteach_spark import registry
 
@@ -204,3 +208,143 @@ def test_operators_ledger_matches_driver_order():
     rows = re.findall(r"^\| (q\S+) \| .*? \| (yes|no) \|$", src, re.M)
     assert {k for k, flag in rows if flag == "yes"} == set(registry.DRIVER_ORDER)
     assert set(registry.all_specs()) <= {k for k, _ in rows}
+
+
+# -- Prepared queries: a key's built plan is reused while its inputs and
+# session confs hold.
+
+PREPARED = "_trafficteach_prepared"
+
+
+def _fn(key):
+    return registry.all_specs()[key].fn
+
+
+def _same_plan(a, b):
+    """One analyzed plan: a rebuild allocates new attribute ids."""
+    return a._jdf.logicalPlan().equals(b._jdf.logicalPlan())
+
+
+def test_prepared_query_reuses_its_plan_while_inputs_hold(spark, tiny_sf_dir):
+    from trafficteach_spark.operators.relational import q01_filter_range
+
+    q01 = _fn("q01_filter_range")
+    first = q01(spark, tiny_sf_dir)
+    second = q01(spark, tiny_sf_dir)
+    assert _same_plan(second, first)
+    assert second is not first  # a new Dataset: the first one's execution state stays its own
+    raw = q01_filter_range(spark, tiny_sf_dir)  # the module-level function is not memoized
+    assert not _same_plan(raw, first)
+    assert not _same_plan(q01_filter_range(spark, tiny_sf_dir), raw)
+    assert sorted(second.collect()) == sorted(raw.collect())
+
+
+def test_reused_plan_explains_unexecuted(spark, tiny_sf_dir):
+    import io
+    from contextlib import redirect_stdout
+
+    q13 = _fn("q13_follow_within")
+    q13(spark, tiny_sf_dir).collect()
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        q13(spark, tiny_sf_dir).explain("formatted")
+    assert "isFinalPlan=false" in buf.getvalue()
+
+
+@pytest.mark.parametrize("nested", [False, True], ids=["flat", "date_partition"])
+def test_prepared_query_replans_after_in_place_rewrite(spark, tmp_path, nested):
+    from tests.test_session import _write_region
+    from trafficteach_spark.sources.tables import load_table
+
+    builds = []
+
+    def region_keys(s, d):
+        builds.append(d)
+        return load_table(s, d, "region").select("r_regionkey")
+
+    keys = registry.prepare("test_region_keys", region_keys)
+    table = tmp_path / "region.parquet"
+    part_dir = table / "date=2024-01-06" if nested else table
+    part_dir.mkdir(parents=True)
+    part = part_dir / "part-00000.parquet"
+    _write_region(part, [0, 1])
+    first = keys(spark, str(tmp_path))
+    assert _same_plan(keys(spark, str(tmp_path)), first)
+    assert len(builds) == 1
+
+    time.sleep(0.01)  # a distinct mtime_ns on coarse filesystems
+    _write_region(part, [0, 1, 2])  # same file name, same directory entries
+    again = keys(spark, str(tmp_path))
+    assert len(builds) == 2
+    assert sorted(r[0] for r in again.collect()) == [0, 1, 2]
+    assert _same_plan(keys(spark, str(tmp_path)), again)
+    assert len(builds) == 2
+
+
+def test_prepared_query_replans_on_conf_change(spark, tiny_sf_dir):
+    ansi = "spark.sql.ansi.enabled"
+    q01 = _fn("q01_filter_range")
+    saved = spark.conf.get(ansi)
+    first = q01(spark, tiny_sf_dir)
+    try:
+        spark.conf.set(ansi, "false" if saved == "true" else "true")
+        flipped = q01(spark, tiny_sf_dir)
+        assert not _same_plan(flipped, first)
+        assert _same_plan(q01(spark, tiny_sf_dir), flipped)
+    finally:
+        spark.conf.set(ansi, saved)
+    assert not _same_plan(q01(spark, tiny_sf_dir), flipped)
+
+
+@pytest.mark.parametrize("key", ["q106_session_concurrency", "q134_dedup_impact"])
+def test_persisting_and_eager_builds_are_rebuilt_every_call(spark, tiny_sf_dir, key):
+    from trafficteach_spark.session import cache_scope
+
+    fn = _fn(key)
+    with cache_scope(spark):
+        first = fn(spark, tiny_sf_dir)
+        rows = sorted(first.collect())
+    with cache_scope(spark):
+        # q134's second build reuses the dedup layer's checkpointed
+        # clusters: no job runs, but its plan reads evictable blocks.
+        second = fn(spark, tiny_sf_dir)
+        assert not _same_plan(second, first)
+        assert sorted(second.collect()) == rows
+    assert key not in spark.__dict__[PREPARED]
+
+
+def test_new_session_never_receives_another_sessions_plan(spark, tiny_sf_dir):
+    q01 = _fn("q01_filter_range")
+    mine = q01(spark, tiny_sf_dir)
+    other = spark.newSession()
+    theirs = q01(other, tiny_sf_dir)
+    assert not _same_plan(theirs, mine)
+    assert theirs.sparkSession is other
+    again = q01(other, tiny_sf_dir)
+    assert again.sparkSession is other
+    assert _same_plan(again, theirs)
+    assert _same_plan(q01(spark, tiny_sf_dir), mine)
+
+
+def test_prepared_query_keeps_each_dirs_rows(spark, tiny_sf_dir):
+    from tests.conftest import SMOKE_SF_DIR
+
+    q01 = _fn("q01_filter_range")
+    tiny = q01(spark, tiny_sf_dir).count()
+    smoke = q01(spark, SMOKE_SF_DIR)
+    assert smoke.count() != tiny
+    again = q01(spark, tiny_sf_dir)
+    assert again.count() == tiny
+    assert _same_plan(q01(spark, tiny_sf_dir), again)  # the entry now holds the tiny dir's plan
+    assert q01(spark, SMOKE_SF_DIR).count() == smoke.count()
+
+
+def test_outer_fingerprint_covers_an_inner_keys_stamps(spark, tiny_sf_dir):
+    """q203 builds on q08's prepared frame: an inner hit re-stamps q08's
+    inputs into q203's fingerprint."""
+    _fn("q08_stratified_sample")(spark, tiny_sf_dir)
+    q203 = _fn("q203_sample_representativeness")
+    outer = q203(spark, tiny_sf_dir)
+    memo = spark.__dict__[PREPARED]
+    assert set(memo["q08_stratified_sample"][1]) <= set(memo["q203_sample_representativeness"][1])
+    assert _same_plan(q203(spark, tiny_sf_dir), outer)

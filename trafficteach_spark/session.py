@@ -223,9 +223,12 @@ def evict_stale_memo(memo: dict, spark: SparkSession) -> None:
     accidental access) for the life of the process — a real leak for a
     long-lived host iterating over sessions (round-6 advisory). Stale
     entries are re-buildable by construction, so eviction is always
-    safe. Called by every memo accessor; current-app entries (any
-    sf_dir) are kept — per-dataset growth within one app is bounded by
-    the handful of sf_dirs a process touches.
+    safe. Called by each of those module-level memos' accessors (the
+    memos held on a session object — the base-table frames and the
+    prepared queries — go with their session and do not call it);
+    current-app entries (any sf_dir) are kept — per-dataset growth
+    within one app is bounded by the handful of sf_dirs a process
+    touches.
     """
     app = spark.sparkContext.applicationId
     for key in [k for k in memo if k[0] != app]:

@@ -18,6 +18,9 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +31,35 @@ from trafficteach_spark.session import ensure_session_confs
 from trafficteach_spark.functions.exprs import ns_long_to_ntz_us
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# path -> stamp of every part_file_stamp taken inside the innermost
+# recording_stamps() block; None marks a path whose listing failed or
+# changed between two listings of one block.
+_RECORDED: ContextVar[dict | None] = ContextVar("trafficteach_recorded_stamps", default=None)
+
+
+@contextmanager
+def recording_stamps() -> Iterator[dict]:
+    """Collect ``{path: stamp}`` of every :func:`part_file_stamp` taken
+    inside the block (a failed or unstable listing records None). On
+    exit the record is merged into any enclosing block's, so a build
+    that calls another prepared query covers that query's inputs too."""
+    outer = _RECORDED.get()
+    record: dict = {}
+    token = _RECORDED.set(record)
+    try:
+        yield record
+    finally:
+        _RECORDED.reset(token)
+        if outer is not None:
+            for path, stamp in record.items():
+                _record(outer, path, stamp)
+
+
+def _record(record: dict, path: str, stamp: tuple | None) -> None:
+    if record.get(path, stamp) != stamp:
+        stamp = None
+    record[path] = stamp
 
 
 def part_file_stamp(path: str) -> tuple[tuple[str, int, int], ...]:
@@ -45,7 +77,22 @@ def part_file_stamp(path: str) -> tuple[tuple[str, int, int], ...]:
     its own single part. stat-only, no file reads. Raises
     FileNotFoundError when *path* is missing or a part vanishes mid-walk
     (a concurrent writer); each caller picks its own policy for that.
+    Inside :func:`recording_stamps` the result (or the failure) is
+    recorded.
     """
+    record = _RECORDED.get()
+    if record is None:
+        return _list_parts(path)
+    try:
+        stamp = _list_parts(path)
+    except OSError:
+        _record(record, path, None)
+        raise
+    _record(record, path, stamp)
+    return stamp
+
+
+def _list_parts(path: str) -> tuple[tuple[str, int, int], ...]:
     if not os.path.isdir(path):
         st = os.stat(path)
         return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
