@@ -3,7 +3,8 @@ verdict item 3).
 
 The registry's caching contract (registry.py module docstring) promises
 the dedup chain's localCheckpoint'ed pair/cluster frames are
-pair-count-sized, not corpus-sized, and live until application exit.
+pair-count-sized, not corpus-sized, and live as long as their session
+frames.
 These tests pin the guard rail around that promise:
 
 - ``materialized_layer_bytes`` reads live block sizes (>0 after a
@@ -13,6 +14,8 @@ These tests pin the guard rail around that promise:
   entries), while eviction does;
 - a cap breach evicts other datasets' layers first, then REFUSES the
   materialization loudly (no silent corpus-shaped pinning);
+- the layer and its ledger are held per session and rebuilt after a
+  rewrite of the documents table;
 - the checkpoint residue is row-shaped: bounded by a small per-row
   budget over the pair/cluster row counts, not by corpus size.
 """
@@ -23,6 +26,7 @@ import pytest
 
 from trafficteach_spark.operators.llm import dedup
 from trafficteach_spark.session import cache_scope
+from trafficteach_spark.sources.tables import _SESSION_FRAMES_ATTR
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
@@ -34,12 +38,17 @@ def clean_layer(spark):
     by construction — the frames rebuild on next access), and runs inside
     cache_scope: a re-persisted shingle frame is a catalog cache entry
     that would otherwise outlive the test."""
-    for key in list(dedup._LAYER_LEDGER):
-        dedup._evict_layer_entry(spark, key)
+    for sf_dir in list(dedup._ledger(spark)):
+        dedup._evict_layer_entry(spark, sf_dir)
     with cache_scope(spark):
         yield
-    for key in list(dedup._LAYER_LEDGER):
-        dedup._evict_layer_entry(spark, key)
+    for sf_dir in list(dedup._ledger(spark)):
+        dedup._evict_layer_entry(spark, sf_dir)
+
+
+def _frames(spark) -> dict:
+    """The session's kept operator frames: {(stage, sf_dir): (stamps, frame)}."""
+    return spark.__dict__.get(_SESSION_FRAMES_ATTR, {})
 
 
 def test_readout_eviction_and_clearcache_contract(spark):
@@ -48,8 +57,7 @@ def test_readout_eviction_and_clearcache_contract(spark):
     dedup.materialized_clusters(spark, SF_SMALL)
     built = dedup.materialized_layer_bytes(spark)
     assert built > 0
-    key = dedup._memo_key(spark, SF_SMALL)
-    assert set(dedup._LAYER_LEDGER) == {key}
+    assert set(dedup._ledger(spark)) == {SF_SMALL}
 
     # The registry contract: clearCache() must NOT free the layer...
     spark.catalog.clearCache()
@@ -60,9 +68,10 @@ def test_readout_eviction_and_clearcache_contract(spark):
     assert after_clear <= built
 
     # Eviction frees the checkpoint blocks and the memos rebuild.
-    dedup._evict_layer_entry(spark, key)
+    dedup._evict_layer_entry(spark, SF_SMALL)
     assert dedup.materialized_layer_bytes(spark) == 0
-    assert key not in dedup._PAIRS_MEMO and key not in dedup._CLUSTERS_MEMO
+    assert ("dedup_pairs", SF_SMALL) not in _frames(spark)
+    assert ("dedup_clusters", SF_SMALL) not in _frames(spark)
     rebuilt = dedup.materialized_pairs(spark, SF_SMALL)
     assert rebuilt.count() > 0
     assert dedup.materialized_layer_bytes(spark) > 0
@@ -79,8 +88,8 @@ def test_cap_breach_evicts_others_then_refuses(spark, monkeypatch):
     # The other dataset's layer was evicted under pressure, and the
     # refused entry was not left half-registered: nothing is pinned.
     assert dedup.materialized_layer_bytes(spark) == 0
-    assert dedup._LAYER_LEDGER == {}
-    assert dedup._PAIRS_MEMO == {}
+    assert dedup._ledger(spark) == {}
+    assert not any(stage == "dedup_pairs" for stage, *_ in _frames(spark))
 
     # With the cap back at the default the same build succeeds.
     monkeypatch.delenv(dedup._LAYER_CAP_ENV)
@@ -114,10 +123,10 @@ def test_eviction_revives_shingle_cache(spark):
     the memo is empty, and the next access re-persists a cache that
     actually fills blocks again."""
     dedup.materialized_pairs(spark, SF_SMALL)  # build fills the shingle cache
-    key = dedup._memo_key(spark, SF_SMALL)
-    assert key in dedup._SHINGLE_MEMO
-    dedup._evict_layer_entry(spark, key)
-    assert key not in dedup._SHINGLE_MEMO
+    key = ("dedup_shingles", SF_SMALL)
+    assert key in _frames(spark)
+    dedup._evict_layer_entry(spark, SF_SMALL)
+    assert key not in _frames(spark)
 
     from pyspark.storagelevel import StorageLevel
 
@@ -132,24 +141,30 @@ def test_eviction_revives_shingle_cache(spark):
     )
 
 
-def test_dead_app_ledger_entries_are_purged_not_unpersisted(spark):
-    """RDD ids restart at 0 per SparkContext, so a ledger entry from a
-    previous application would alias the live app's ids: it must be
-    DROPPED by the accounting entry points (its blocks no longer
-    exist), never counted in the readout and never fed to unpersist —
-    a cap breach evicting through a stale id would kill an unrelated
-    live RDD (round-10 review finding)."""
+def test_new_session_sees_neither_frames_nor_ledger_of_another(spark):
+    """The layer frames and their byte ledger live on the session that
+    built them: a ``spark.newSession()`` builds its own layer, reads
+    none of the other session's ledger, and evicting its layer leaves
+    the other session's frame usable. The SQL cache is shared by the
+    sessions of one context, so only checkpoint blocks are compared."""
     df = dedup.materialized_pairs(spark, SF_SMALL)
-    live_key = dedup._memo_key(spark, SF_SMALL)
+    spark.catalog.clearCache()
     live_bytes = dedup.materialized_layer_bytes(spark)
     assert live_bytes > 0
-    # Forge a dead-app entry aliasing the live entry's RDD ids.
-    stale_key = ("application_dead_0000", SF_SMALL)
-    dedup._LAYER_LEDGER[stale_key] = dict(dedup._LAYER_LEDGER[live_key])
-    # The readout must purge the stale entry, not double-count it.
+
+    other = spark.newSession()
+    assert dedup.materialized_layer_bytes(other) == 0
+    assert dedup._ledger(other) == {}
+    theirs = dedup.materialized_pairs(other, SF_SMALL)
+    assert theirs is not df
+    assert set(dedup._ledger(other)) == {SF_SMALL}
+    assert not set(dedup._ledger(other)[SF_SMALL]) & set(dedup._ledger(spark)[SF_SMALL])
+
+    spark.catalog.clearCache()
+    dedup._evict_layer_entry(other, SF_SMALL)
+    assert dedup.materialized_layer_bytes(other) == 0
     assert dedup.materialized_layer_bytes(spark) == live_bytes
-    assert stale_key not in dedup._LAYER_LEDGER
-    # And the live frame must still be usable (nothing was unpersisted).
+    assert dedup.materialized_pairs(spark, SF_SMALL) is df
     assert df.count() > 0
 
 
@@ -164,8 +179,8 @@ def test_prebuild_entry_point_builds_layer_and_is_idempotent(spark):
     assert report["n_pairs"] > 0
     assert report["n_cluster_rows"] > 0
     assert report["layer_bytes"] > 0
-    key = dedup._memo_key(spark, SF_SMALL)
-    assert key in dedup._PAIRS_MEMO and key in dedup._CLUSTERS_MEMO
+    assert ("dedup_pairs", SF_SMALL) in _frames(spark)
+    assert ("dedup_clusters", SF_SMALL) in _frames(spark)
 
     again = dedup.prebuild_dedup_layer(spark, SF_SMALL)
     for field in ("n_docs", "n_pairs", "n_cluster_rows"):
@@ -196,31 +211,36 @@ def test_dead_checkpoint_declaration_survives_derivation(spark):
     # live belongs to the shingle cache or the pair/cluster
     # checkpoints, whose combined count is bounded. A pinned edge list
     # would add an extra live corpus-scale entry here.
-    key = dedup._memo_key(spark, SF_SMALL)
     live = dedup._storage_sizes(spark)
-    live_ledgered = [r for r in dedup._LAYER_LEDGER[key] if live.get(r, 0) > 0]
+    live_ledgered = [r for r in dedup._ledger(spark)[SF_SMALL] if live.get(r, 0) > 0]
     assert len(live_ledgered) <= 3, live_ledgered
 
 
 def test_in_place_rewrite_invalidates_layer(spark, tmp_path):
-    """Rewriting documents.parquet at the SAME path must rotate the
-    memo key (dataset fingerprint) and evict the old entries — before
-    round 12 the checkpointed layer kept serving the OLD corpus while
-    non-memoized operators and the oracles read the new files."""
+    """Rewriting documents.parquet at the SAME path must fail the kept
+    frames' stamp check and free the old layer before the rebuild —
+    before round 12 the checkpointed layer kept serving the OLD corpus
+    while non-memoized operators and the oracles read the new files."""
     import shutil
+
+    from trafficteach_spark.sources.tables import part_file_stamp
 
     work = tmp_path / "ds"
     work.mkdir()
-    shutil.copy(f"{SF_SMALL}/documents.parquet", work / "documents.parquet")
-    k1 = dedup._memo_key(spark, str(work))
+    path = str(work / "documents.parquet")
+    shutil.copy(f"{SF_SMALL}/documents.parquet", path)
+    key = ("dedup_pairs", str(work))
     n1 = dedup.materialized_pairs(spark, str(work)).count()
-    assert k1 in dedup._PAIRS_MEMO
+    stamps1 = _frames(spark)[key][0]
+    assert stamps1 == {path: part_file_stamp(path)}
+    old_ids = set(dedup._ledger(spark)[str(work)])
 
     # in-place rewrite with a different (valid) corpus
-    shutil.copy(f"{SF_MED}/documents.parquet", work / "documents.parquet")
-    k2 = dedup._memo_key(spark, str(work))
-    assert k2 != k1
-    assert k1 not in dedup._PAIRS_MEMO and k1 not in dedup._LAYER_LEDGER
+    shutil.copy(f"{SF_MED}/documents.parquet", path)
+    assert part_file_stamp(path) != stamps1[path]
     n2 = dedup.materialized_pairs(spark, str(work)).count()
-    assert k2 in dedup._PAIRS_MEMO
+    assert _frames(spark)[key][0] == {path: part_file_stamp(path)}
+    assert not old_ids & set(dedup._ledger(spark)[str(work)])
+    live = dedup._storage_sizes(spark)
+    assert not any(live.get(rid, 0) for rid in old_ids)  # the old layer's blocks were freed
     assert n2 != n1  # the rebuilt layer reflects the NEW corpus

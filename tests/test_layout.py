@@ -3,6 +3,9 @@ inspecting executed plans (SURVEY §5 100 TB design notes)."""
 
 from __future__ import annotations
 
+import os
+import time
+
 import pytest
 
 from tests.conftest import SMOKE_SF_DIR
@@ -352,15 +355,14 @@ def test_scan_file_count_survives_concurrent_delete(tmp_path, monkeypatch):
 
 def test_nested_part_rewrite_changes_every_listing(tmp_path):
     """One part-file listing answers "did this table change?" for the
-    loader, the spread guard and the dedup memo key. On a date-partitioned
-    table, rewriting a nested part file in place (the partition and root
-    directory mtimes do not move) must change both the listing stamp and
-    the dedup fingerprint, and a new nested part must change the scan
-    file count. No Spark session: this is stat-only."""
+    loader, the spread guard and the session frames. On a
+    date-partitioned table, rewriting a nested part file in place (the
+    partition and root directory mtimes do not move) must change the
+    listing stamp, and a new nested part must change the scan file
+    count. No Spark session: this is stat-only."""
     import os
 
-    from trafficteach_spark.operators.llm.dedup import _dataset_fingerprint
-    from trafficteach_spark.sources.tables import _scan_file_count, part_file_stamp
+    from trafficteach_spark.sources.tables import _scan_file_count, part_file_stamp, stamps_hold
 
     sf = tmp_path / "sf"
     part_dir = sf / "documents.parquet" / "date=2024-01-01"
@@ -371,7 +373,7 @@ def test_nested_part_rewrite_changes_every_listing(tmp_path):
     (part_dir / "part-empty.parquet").write_bytes(b"")
 
     root = str(sf / "documents.parquet")
-    stamp, fp = part_file_stamp(root), _dataset_fingerprint(str(sf))
+    stamp = part_file_stamp(root)
     assert [name for name, _, _ in stamp] == ["date=2024-01-01/part-0.parquet"]
     assert _scan_file_count(str(sf), "documents") == 1
 
@@ -380,7 +382,76 @@ def test_nested_part_rewrite_changes_every_listing(tmp_path):
     os.utime(part, ns=(stamp[0][2] + 10**9, stamp[0][2] + 10**9))
     assert [os.stat(d).st_mtime_ns for d in (root, part_dir)] == dir_mtimes
     assert part_file_stamp(root) != stamp
-    assert _dataset_fingerprint(str(sf)) != fp
+    assert not stamps_hold({root: stamp})
 
     (part_dir / "part-1.parquet").write_bytes(b"z")
     assert _scan_file_count(str(sf), "documents") == 2
+
+
+# -- Session frames after a rewrite: the operator frames several keys share
+# (rollup base, hourly grid, k-gram frame) must be rebuilt once an input
+# changes, whether its parts are renamed or rewritten under the same name.
+
+_STALE_PRONE = ("q101_incremental_rollup", "q62_time_resample", "q116_gap_fill_locf", "q50_decontaminate")
+
+
+def _as_part_dirs(src, dst):
+    """Copy every table of *src* to *dst* as a directory of one part."""
+    import shutil
+
+    for name in sorted(os.listdir(src)):
+        (dst / name).mkdir(parents=True)
+        shutil.copy(os.path.join(src, name), dst / name / "part-00000.parquet")
+
+
+def _halve(table_dir, new_part):
+    """Rewrite a part directory to the first half of its rows, as *new_part*."""
+    import pyarrow.parquet as pq
+
+    (old,) = sorted(table_dir.glob("*.parquet"))
+    rows = pq.read_table(old)
+    old.unlink()
+    time.sleep(0.01)  # a distinct mtime_ns on coarse filesystems
+    pq.write_table(rows.slice(0, rows.num_rows // 2), table_dir / new_part)
+
+
+def _check(spark, sf, keys):
+    from tools import parity
+
+    con = parity.duckdb_conn(str(sf))
+    return {k: parity.check(spark, con, k, str(sf)) for k in keys}
+
+
+def test_rewrite_with_renamed_parts_rebuilds_session_frames(spark, tmp_path):
+    """Renamed parts and no clearCache between the calls: every key
+    still hash-matches its oracle over the rewritten tables."""
+    from trafficteach_spark.session import cache_scope
+
+    sf = tmp_path / "sf"
+    _as_part_dirs(SMOKE_SF_DIR, sf)
+    with cache_scope(spark):
+        before = _check(spark, sf, _STALE_PRONE)
+        assert all(r.ok for r in before.values()), before
+        _halve(sf / "events.parquet", "part-00001.parquet")
+        _halve(sf / "documents.parquet", "part-00001.parquet")
+        after = _check(spark, sf, _STALE_PRONE)
+    assert all(r.ok for r in after.values()), after
+    assert after["q62_time_resample"].detail != before["q62_time_resample"].detail
+
+
+def test_in_place_rewrite_rebuilds_rollup_base(spark, tmp_path):
+    """Same part name, each call inside cache_scope (as perfbench runs
+    it): q101's localCheckpointed base must follow the rewrite."""
+    from trafficteach_spark.session import cache_scope
+
+    sf = tmp_path / "sf"
+    _as_part_dirs(SMOKE_SF_DIR, sf)
+    key = "q101_incremental_rollup"
+    with cache_scope(spark):
+        before = _check(spark, sf, [key])[key]
+    assert before.ok, before.detail
+    _halve(sf / "events.parquet", "part-00000.parquet")
+    with cache_scope(spark):
+        after = _check(spark, sf, [key])[key]
+    assert after.ok, after.detail
+    assert after.detail != before.detail

@@ -1289,7 +1289,7 @@ def test_feature_bins_sketch_is_equi_depth(spark):
 
 
 def test_dedup_memos_are_dataset_scoped(spark):
-    """The materialized pair/cluster frames are keyed by (app, sf_dir):
+    """The materialized pair/cluster frames are kept per (session, sf_dir):
     two datasets in one session must not cross-contaminate, and repeated
     invocations must be value-stable (a memo bug here would silently
     poison q46/q88/q91 for every later dataset in the session)."""
@@ -1312,9 +1312,12 @@ def test_dedup_memos_are_dataset_scoped(spark):
         ).collect()
     }
     assert big == fresh_big
-    # and the memo actually holds separate entries per sf_dir
-    assert dedup._memo_key(spark, sf_small) in dedup._PAIRS_MEMO
-    assert dedup._memo_key(spark, sf_big) in dedup._PAIRS_MEMO
+    # and the session actually holds separate entries per sf_dir
+    from trafficteach_spark.sources.tables import _SESSION_FRAMES_ATTR
+
+    frames = spark.__dict__[_SESSION_FRAMES_ATTR]
+    assert ("dedup_pairs", sf_small) in frames
+    assert ("dedup_pairs", sf_big) in frames
 
 
 def test_injected_pairs_override_is_used(spark):
@@ -1573,6 +1576,7 @@ def test_incremental_rollup_merges_base_and_delta(spark, tiny_sf_dir):
 
     from tests.conftest import TINY_EVENTS
     from trafficteach_spark.operators import analytics
+    from trafficteach_spark.sources.tables import _SESSION_FRAMES_ATTR
 
     got = {
         (r["event_type"], r["day"]): r
@@ -1594,11 +1598,12 @@ def test_incremental_rollup_merges_base_and_delta(spark, tiny_sf_dir):
         assert abs(r["sum_value"] - round(e["s"], 6)) < 1e-9
         assert (r["min_value"], r["max_value"]) == (e["mn"], e["mx"])
         assert abs(r["avg_value"] - round(e["s"] / e["n"], 6)) < 1e-9
-    # the base memo is materialized once per (app, dataset) and reused
-    key = (spark.sparkContext.applicationId, tiny_sf_dir)
-    base1 = analytics._ROLLUP_BASE_MEMO[key]
+    # the base is materialized once per (session, dataset) and reused
+    frames = spark.__dict__[_SESSION_FRAMES_ATTR]
+    base1 = frames[("rollup_base", tiny_sf_dir)][1]
     Q["q101_incremental_rollup"](spark, tiny_sf_dir)
-    assert analytics._ROLLUP_BASE_MEMO[key] is base1
+    assert frames[("rollup_base", tiny_sf_dir)][1] is base1
+    assert analytics.rollup_base(spark, tiny_sf_dir) is base1
 
 
 def test_misra_gries_bounds_vs_exact(spark):

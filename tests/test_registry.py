@@ -306,11 +306,18 @@ def test_persisting_and_eager_builds_are_rebuilt_every_call(spark, tiny_sf_dir, 
         rows = sorted(first.collect())
     with cache_scope(spark):
         # q134's second build reuses the dedup layer's checkpointed
-        # clusters: no job runs, but its plan reads evictable blocks.
+        # clusters: no job runs, so its plan is kept unwalked...
         second = fn(spark, tiny_sf_dir)
         assert not _same_plan(second, first)
         assert sorted(second.collect()) == rows
-    assert key not in spark.__dict__[PREPARED]
+    with cache_scope(spark):
+        # ...and the first call that matches it walks the plan, finds the
+        # evictable blocks it reads, drops the plan and builds afresh.
+        third = fn(spark, tiny_sf_dir)
+        assert not _same_plan(third, second)
+        assert sorted(third.collect()) == rows
+    entry = spark.__dict__[PREPARED].get(key)
+    assert entry is None or entry[3] is None  # no plan is kept for the key
 
 
 def test_new_session_never_receives_another_sessions_plan(spark, tiny_sf_dir):

@@ -76,6 +76,8 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for name in schemas.TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isdir(path):  # a table written as a directory of part files
+            path = os.path.join(path, "*.parquet")
         if name == "events":
             # Pin the oracle's ts to the engine's MICROsecond grain
             # (round-12 review finding): the events parquet is

@@ -22,7 +22,7 @@ from trafficteach_spark.functions.exprs import (
     money,
 )
 from trafficteach_spark.registry import register
-from trafficteach_spark.sources.tables import load_table, spread_scan
+from trafficteach_spark.sources.tables import load_table, session_frame, spread_scan
 
 # Fixture event taxonomy (fixed, like the reference's action list); an
 # explicit pivot value list keeps the output schema static — dynamic
@@ -1137,30 +1137,21 @@ def q97_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # merges. The cutover is part of the operator contract (like PSI_SPLIT).
 ROLLUP_CUTOVER = "2024-01-20 00:00:00"
 
-# (applicationId, sf_dir) -> localCheckpoint'ed base-aggregate frame.
-_ROLLUP_BASE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def rollup_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized daily rollup of all events before
-    ``ROLLUP_CUTOVER`` — computed once per (app, dataset) and
-    localCheckpoint-materialized, the stand-in for the persisted
-    aggregate table an incremental pipeline maintains."""
-    from trafficteach_spark.session import evict_stale_memo
-
-    # Dead-application entries pin checkpointed frames for process
-    # lifetime otherwise — same eviction discipline as every other
-    # operator-level memo (round-11 review finding).
-    evict_stale_memo(_ROLLUP_BASE_MEMO, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _ROLLUP_BASE_MEMO.get(key)
-    if df is None:
-        ev = load_table(spark, sf_dir, "events").where(
-            F.col("ts") < F.lit(ROLLUP_CUTOVER).cast("timestamp_ntz")
-        )
-        df = _daily_partial(ev).localCheckpoint(eager=True)
-        _ROLLUP_BASE_MEMO[key] = df
-    return df
+    ``ROLLUP_CUTOVER`` — localCheckpoint-materialized once per (session,
+    sf_dir) and kept while the events part files are unchanged
+    (``session_frame``), the stand-in for the persisted aggregate table
+    an incremental pipeline maintains."""
+    return session_frame(
+        spark,
+        ("rollup_base", sf_dir),
+        lambda: _daily_partial(
+            load_table(spark, sf_dir, "events").where(
+                F.col("ts") < F.lit(ROLLUP_CUTOVER).cast("timestamp_ntz")
+            )
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _daily_partial(ev: DataFrame) -> DataFrame:
@@ -1193,8 +1184,9 @@ def _daily_partial(ev: DataFrame) -> DataFrame:
 def q101_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance: the daily per-type
     rollup refreshed by merging the MATERIALIZED base aggregate (all
-    data before the cutover — :func:`rollup_base`, computed once per
-    (app, dataset)) with a partial aggregate of only the delta rows —
+    data before the cutover — :func:`rollup_base`, kept on the session
+    and rebuilt when the events part files change) with a partial
+    aggregate of only the delta rows —
     the pattern that turns a 100 TB nightly full refresh into a job
     sized by the day's arrivals.
 

@@ -33,7 +33,7 @@ from trafficteach_spark.functions.exprs import (
     md5_prefix_int_spark,
 )
 from trafficteach_spark.registry import register
-from trafficteach_spark.sources.tables import load_table, spread_scan
+from trafficteach_spark.sources.tables import load_table, persisted_frame, spread_scan
 
 # PII patterns restricted to syntax that Java regex (Spark) and RE2
 # (DuckDB) interpret identically: character classes, bounded repetition,
@@ -308,38 +308,25 @@ def word_kgrams(docs: DataFrame, k: int) -> DataFrame:
     )
 
 
-_KGRAMS_MEMO: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def shared_word_kgrams(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """The persisted k-gram frame, ONE instance per (app, dataset, k) —
-    q50 and q57 both consume the identical word_kgrams(docs, DECON_K)
-    frame, and each used to persist() a FRESH instance per invocation
-    with no unpersist: in a bench loop those stack as distinct cache
-    entries until LRU eviction, and running both queries paid the
-    dominant 8-gram HOF explode twice (round-6 review finding — the
-    same per-call cache-pressure leak dedup's _SHINGLE_MEMO fixed).
-    clearCache() evicts the data AND deregisters the plan, so the memo
-    re-persists into the same slot when that happened, exactly like
-    dedup.shared_shingle_sets."""
-    from pyspark.storagelevel import StorageLevel
-
-    from trafficteach_spark.session import evict_stale_memo
-
-    evict_stale_memo(_KGRAMS_MEMO, spark)
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    df = _KGRAMS_MEMO.get(key)
-    if df is None:
-        # spread_scan (guide §2.5): the k-gram HOF explode is the dominant
-        # cost and would otherwise run on the single scan split.
-        docs = spread_scan(
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
-        )
-        df = word_kgrams(docs, k).persist()
-        _KGRAMS_MEMO[key] = df
-    elif df.storageLevel == StorageLevel.NONE:
-        df.persist()
-    return df
+    """The persisted k-gram frame, ONE instance per (session, sf_dir, k),
+    kept while the documents part files are unchanged
+    (``persisted_frame``) — q50 and q57 both consume the identical
+    word_kgrams(docs, DECON_K) frame, and each used to persist() a FRESH
+    instance per invocation with no unpersist: in a bench loop those
+    stack as distinct cache entries until LRU eviction, and running both
+    queries paid the dominant 8-gram HOF explode twice (round-6 review
+    finding)."""
+    # spread_scan (guide §2.5): the k-gram HOF explode is the dominant
+    # cost and would otherwise run on the single scan split.
+    return persisted_frame(
+        spark,
+        ("word_kgrams", sf_dir, k),
+        lambda: word_kgrams(
+            spread_scan(spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"),
+            k,
+        ),
+    )
 
 
 @register(
@@ -384,7 +371,7 @@ def q50_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE picks broadcast while the measured side is small and falls
     back to a gram-key shuffle join past that.
     """
-    # shared memoized gram frame (one persisted instance per app/dataset;
+    # shared gram frame (one persisted instance per session and dataset;
     # the explode feeds both the benchmark side and the corpus side, and
     # q57 reuses the same frame)
     grams = shared_word_kgrams(spark, sf_dir, DECON_K)
@@ -1292,7 +1279,7 @@ def q99_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain mix) after dedup.
 
     Plan: pure composition over the dedup chain's MATERIALIZED cluster
-    frame (dedup.materialized_clusters — computed once per (app,
+    frame (dedup.materialized_clusters — computed once per (session,
     dataset), localCheckpoint'ed): one broadcast-sized join to attach
     source, one hash-aggregate on source. Running it after q46/q88 costs
     only that aggregate; the oracle re-derives the full recursive-CTE

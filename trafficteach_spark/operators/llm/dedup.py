@@ -27,7 +27,13 @@ from trafficteach_spark.functions.exprs import (
     md5_prefix_int_spark,
 )
 from trafficteach_spark.registry import register
-from trafficteach_spark.sources.tables import load_table, part_file_stamp, spread_scan
+from trafficteach_spark.sources.tables import (
+    load_table,
+    persisted_frame,
+    pop_session_frame,
+    session_frame,
+    spread_scan,
+)
 
 # Word 3-gram shingles: with the fixture's 31-word vocabulary, token *sets*
 # are degenerate (random-pair median Jaccard 0.64) while shingle sets
@@ -90,17 +96,20 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-cluster) whose stages used to recompute their upstream on every
 # invocation — the three slowest bench entries shared that one root cause.
 # A production pipeline materializes each intermediate once per dataset;
-# these memos are that materialized-view layer, keyed by (Spark
-# application, sf_dir, dataset fingerprint) so a fresh session, a
-# different dataset, or an in-place REWRITE of the same path never sees
-# stale frames (see _dataset_fingerprint).
+# these session frames (``sources.tables.session_frame``) are that
+# materialized-view layer: one entry per (stage, sf_dir) on the session,
+# served while the documents part files the build listed are unchanged,
+# so a fresh session, a different dataset, or a REWRITE of the same path
+# (in place or with renamed parts) never sees stale frames. A stale entry
+# frees its dataset's whole layer (``_evict_layer_entry``) before the
+# rebuild.
 #
 # Two materialization grades, deliberately different:
-# - the SHINGLE frame is memoized as a single persisted DataFrame
-#   *instance* (re-invocations reuse one cache slot instead of stacking a
-#   new persisted plan per call — the round-4 advisory's cache-pressure
-#   leak; `spark.catalog.clearCache()` still evicts its data, after which
-#   it recomputes into the same slot);
+# - the SHINGLE frame is kept as a single persisted DataFrame
+#   *instance* (``persisted_frame``: re-invocations reuse one cache slot
+#   instead of stacking a new persisted plan per call — the round-4
+#   advisory's cache-pressure leak; `spark.catalog.clearCache()` still
+#   evicts its data, after which it recomputes into the same slot);
 # - the PAIRS / CLUSTERS frames are `localCheckpoint`ed (actually
 #   materialized, lineage truncated): downstream consumers (q46, q88)
 #   reuse rows instead of re-running the shingle join. Checkpoint blocks
@@ -108,100 +117,60 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   consumers for their upstream — exactly the composition-reuse contract
 #   `funnel()` set for chains.
 
-_SHINGLE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_CLUSTERS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_EVAL_HASHED_MEMO: dict[tuple[str, str], DataFrame] = {}
+_PERSISTED_STAGES = ("dedup_shingles", "dedup_eval_hashed")
+_CHECKPOINTED_STAGES = ("dedup_pairs", "dedup_clusters")
 
 
-def _dataset_fingerprint(sf_dir: str) -> str:
-    """Digest of the documents table's :func:`part_file_stamp` — the
-    memo/ledger key component that detects an IN-PLACE rewrite of the
-    dataset at the same path, nested partitions included. (app, sf_dir)
-    alone kept serving the localCheckpoint'ed pair/cluster frames of the
-    OLD corpus after a rewrite, while non-memoized operators and every
-    DuckDB oracle read the new files — silently inconsistent results
-    within one app (round-12 review finding). stat-only, no file reads,
-    so the access path stays microseconds. A missing table digests as
-    empty: its load raises Spark's own PATH_NOT_FOUND."""
-    import hashlib
-    import os
-
-    try:
-        stamp = part_file_stamp(os.path.join(sf_dir, "documents.parquet"))
-    except FileNotFoundError:
-        stamp = ()
-    return hashlib.md5(repr(stamp).encode()).hexdigest()[:16]
-
-
-def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    from trafficteach_spark.session import evict_stale_memo
-
-    for memo in (_SHINGLE_MEMO, _PAIRS_MEMO, _CLUSTERS_MEMO, _EVAL_HASHED_MEMO):
-        evict_stale_memo(memo, spark)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _dataset_fingerprint(sf_dir),
+def _layer_persisted(spark: SparkSession, stage: str, sf_dir: str, build) -> DataFrame:
+    return persisted_frame(
+        spark, (stage, sf_dir), build, lambda _: _evict_layer_entry(spark, sf_dir)
     )
-    # An entry for the SAME (app, sf_dir) under a DIFFERENT fingerprint
-    # is a rewritten dataset's leftover: evict it now (checkpoint blocks
-    # freed, memos dropped) instead of letting corpus-stale frames pin
-    # bytes until cap pressure happens to reach them.
-    stale = {
-        k
-        for store in (
-            _LAYER_LEDGER,
-            _SHINGLE_MEMO,
-            _PAIRS_MEMO,
-            _CLUSTERS_MEMO,
-            _EVAL_HASHED_MEMO,
-        )
-        for k in store
-        if k[:2] == key[:2] and k != key
-    }
-    for k in stale:
-        _evict_layer_entry(spark, k)
-    return key
+
+
+def _layer_checkpointed(spark: SparkSession, stage: str, sf_dir: str, build) -> DataFrame:
+    return session_frame(
+        spark,
+        (stage, sf_dir),
+        lambda: _materialize_accounted(spark, sf_dir, build),
+        lambda _: _evict_layer_entry(spark, sf_dir),
+    )
 
 
 # -- Byte accounting for the checkpoint layer (round-9 verdict item 3) ------
 #
 # The registry's caching contract promises the pair/cluster checkpoint
-# blocks are pair-count-sized, not corpus-sized, and live until app exit.
-# At 100 TB that promise needs a guard rail, not a comment: every
-# materialization is MEASURED (RDD storage-info delta across the eager
-# build — which also charges the CC iteration's internal checkpoints to
-# the entry that created them), recorded in a per-(app, sf_dir) ledger,
-# and checked against a configurable cap. Past the cap, entries for
-# OTHER same-app sf_dirs are evicted first (checkpoint blocks freed
-# via the context's persistent-RDD registry, memo entries dropped so
+# blocks are pair-count-sized, not corpus-sized, and live as long as
+# their session frames. At 100 TB that promise needs a guard rail, not a
+# comment: every materialization is MEASURED (RDD storage-info delta
+# across the eager build — which also charges the CC iteration's
+# internal checkpoints to the entry that created them), recorded in a
+# per-sf_dir ledger held on the session beside its frames, and checked
+# against a configurable cap on that session's layer. Past the cap,
+# entries for OTHER sf_dirs are evicted first (checkpoint blocks freed
+# via the context's persistent-RDD registry, session frames dropped so
 # they rebuild for any FUTURE accessor; a caller still holding a
 # previously returned frame loses it — localCheckpoint truncated its
 # lineage, so the next action on the held reference fails with a
 # missing-block error and the holder must re-fetch through the memo);
 # if the new entry ALONE still exceeds the cap, the materialization
 # refuses loudly instead of silently pinning corpus-shaped state in
-# executor memory for the life of the app.
-#
-# SCOPING: RDD ids restart at 0 with every SparkContext, so ledger
-# entries from a DEAD application would collide with the live app's
-# ids — inflating the readout and, worse, letting a cap breach
-# unpersist the live app's unrelated blocks through a stale id. Every
-# accounting entry point therefore drops other-app ledger entries
-# FIRST (without touching the block manager: their context is gone,
-# the blocks no longer exist) — the ledger twin of
-# session.evict_stale_memo.
+# executor memory for the life of the session.
 #
 # Attribution is conservative: blocks the lazily-persisted shingle SQL
 # cache happens to fill during the build are charged to the ledger too
 # (over-counting, never under); `materialized_layer_bytes` re-reads
 # live block sizes, so anything `clearCache()` later frees drops out.
 
-_LAYER_LEDGER: dict[tuple[str, str], dict[int, int]] = {}
+_LEDGER_ATTR = "_trafficteach_dedup_ledger"
 _LAYER_CAP_ENV = "SPARK_GRAFT_DEDUP_LAYER_CAP_BYTES"
 # ~1000x the measured sf0.1 layer, far under a single executor's memory.
 _LAYER_CAP_DEFAULT = 8 << 30
+
+
+def _ledger(spark: SparkSession) -> dict[str, dict[int, int]]:
+    """sf_dir -> {RDD id: bytes} of this session's materialized layer,
+    oldest materialization first."""
+    return spark.__dict__.setdefault(_LEDGER_ATTR, {})
 
 
 def _storage_sizes(spark: SparkSession) -> dict[int, int]:
@@ -212,36 +181,20 @@ def _storage_sizes(spark: SparkSession) -> dict[int, int]:
     }
 
 
-def _purge_dead_app_entries(spark: SparkSession) -> None:
-    """Drop ledger entries recorded under a different applicationId:
-    their SparkContext is gone, their blocks no longer exist, and their
-    RDD ids would alias the LIVE app's ids (ids restart at 0 per
-    context). No block-manager calls — there is nothing to free. The
-    deletion rule IS session.evict_stale_memo's (value-type-agnostic),
-    so the ledger and the frame memos cannot drift on what "stale app"
-    means (round-12 review finding)."""
-    from trafficteach_spark.session import evict_stale_memo
-
-    evict_stale_memo(_LAYER_LEDGER, spark)
-
-
 def materialized_layer_bytes(spark: SparkSession) -> int:
-    """Bytes currently pinned by the materialized dedup layer. Ledger
-    ids are re-read from the block manager, so blocks that were dropped
-    (or never materialized on this app) count zero."""
-    _purge_dead_app_entries(spark)
+    """Bytes currently pinned by this session's materialized dedup
+    layer. Ledger ids are re-read from the block manager, so blocks that
+    were dropped count zero."""
     live = _storage_sizes(spark)
-    return sum(live.get(rid, 0) for per in _LAYER_LEDGER.values() for rid in per)
+    return sum(live.get(rid, 0) for per in _ledger(spark).values() for rid in per)
 
 
-def _evict_layer_entry(spark: SparkSession, key: tuple[str, str]) -> None:
-    """Free one LIVE-app (app, sf_dir) entry: unpersist its checkpoint
+def _evict_layer_entry(spark: SparkSession, sf_dir: str) -> None:
+    """Free one dataset's layer on this session: unpersist its checkpoint
     RDDs via the persistent-RDD registry (a DataFrame.unpersist() would
-    only touch the SQL cache, not checkpoint blocks) and drop the memos
-    so the frames rebuild for future accessors (held references to the
-    evicted frames are lost — see the ledger comment). Callers must
-    purge dead-app entries first; unpersisting through a stale id would
-    hit an unrelated live RDD.
+    only touch the SQL cache, not checkpoint blocks) and drop its session
+    frames so they rebuild for future accessors (held references to the
+    evicted frames are lost — see the ledger comment).
 
     The SQL-CACHED companions the conservative attribution may have
     charged to this entry (the shingle frame, the hashed eval frame) are
@@ -249,39 +202,37 @@ def _evict_layer_entry(spark: SparkSession, key: tuple[str, str]) -> None:
     ``jrdd.unpersist()`` on a SQL-cache RDD drops its blocks BEHIND the
     CacheManager, and because a direct RDD unpersist also resets the
     RDD's storage level to NONE the cached relation never re-caches —
-    while ``shared_shingle_sets``' self-heal guard reads the CONFIGURED
+    while ``persisted_frame``'s self-heal guard reads the CONFIGURED
     level (still MEMORY_*), so it would never re-persist either: the
-    shared shingle cache would be silently dead for the rest of the app
-    (round-10 review finding). Going through the DataFrame API removes
-    the CacheManager entry too, so the memo rebuild re-persists cleanly."""
+    shared shingle cache would be silently dead for the rest of the
+    session (round-10 review finding). Going through the DataFrame API
+    removes the CacheManager entry too, so the rebuild re-persists
+    cleanly."""
     # blocking=True throughout: the caller re-reads the block manager
     # immediately after eviction (cap re-check, test assertions), and a
     # fire-and-forget unpersist can leave the just-evicted blocks still
     # counted — spuriously refusing a materialization that fits
     # (round-10 review finding).
-    for memo in (_SHINGLE_MEMO, _EVAL_HASHED_MEMO):
-        df = memo.pop(key, None)
+    for stage in _PERSISTED_STAGES:
+        df = pop_session_frame(spark, (stage, sf_dir))
         if df is not None:
             df.unpersist(blocking=True)
     live = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in _LAYER_LEDGER.pop(key, {}):
+    for rid in _ledger(spark).pop(sf_dir, {}):
         jrdd = live.get(rid)
         if jrdd is not None:
             jrdd.unpersist(True)
-    _PAIRS_MEMO.pop(key, None)
-    _CLUSTERS_MEMO.pop(key, None)
+    for stage in _CHECKPOINTED_STAGES:
+        pop_session_frame(spark, (stage, sf_dir))
 
 
-def _materialize_accounted(
-    spark: SparkSession, key: tuple[str, str], build
-) -> DataFrame:
+def _materialize_accounted(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     """Build + eagerly checkpoint one layer frame with byte accounting
     (see the ledger comment above). ``build`` is a zero-arg callable so
     the storage snapshot brackets EVERY action the build runs (the CC
     loop checkpoints per round), not just the final frame."""
     import os
 
-    _purge_dead_app_entries(spark)
     before = _storage_sizes(spark)
     built = build()
     out = built.localCheckpoint(eager=True)
@@ -294,7 +245,8 @@ def _materialize_accounted(
     # they are never ledgered at all.
     for fr in getattr(built, "_dead_after_checkpoint", ()):
         _free_checkpoint_blocks(fr)
-    ledger = _LAYER_LEDGER.setdefault(key, {})
+    ledgers = _ledger(spark)
+    ledger = ledgers.setdefault(sf_dir, {})
     for rid, nbytes in _storage_sizes(spark).items():
         if rid not in before:
             ledger[rid] = nbytes
@@ -304,15 +256,15 @@ def _materialize_accounted(
     # pressure contract, not evict-all: surviving datasets keep their
     # expensive pair/cluster frames (round-10 review finding). Dict
     # insertion order = materialization order, so iteration is LRU-ish.
-    for other in [k for k in _LAYER_LEDGER if k != key]:
+    for other in [k for k in ledgers if k != sf_dir]:
         if materialized_layer_bytes(spark) <= cap:
             break
         _evict_layer_entry(spark, other)
     if materialized_layer_bytes(spark) > cap:
-        this_bytes = sum(_LAYER_LEDGER.get(key, {}).values())
-        _evict_layer_entry(spark, key)
+        this_bytes = sum(ledgers.get(sf_dir, {}).values())
+        _evict_layer_entry(spark, sf_dir)
         raise RuntimeError(
-            f"materialized dedup layer for {key} needs ~{this_bytes} bytes, "
+            f"materialized dedup layer for {sf_dir} needs ~{this_bytes} bytes, "
             f"over the {cap}-byte cap (${_LAYER_CAP_ENV}) even after "
             "evicting every other dataset's layer — the pair frame is "
             "corpus-shaped, not pair-shaped; fix the candidate generator "
@@ -322,63 +274,31 @@ def _materialize_accounted(
 
 
 def shared_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted shingle frame, one instance per (app, dataset).
-
-    ``spark.catalog.clearCache()`` (bench hygiene between queries) not
-    only evicts the data but deregisters the plan from the CacheManager,
-    so the memoized instance must re-``persist()`` when that happened —
-    otherwise every downstream self-join silently recomputes the HOF
-    shingling once per use (measured 4x on q31/q90 at sf0.1)."""
-    return _memoized_persisted(
-        _SHINGLE_MEMO, _memo_key(spark, sf_dir),
-        lambda: _shingle_sets(spark, sf_dir),
-    )
-
-
-def _memoized_persisted(memo: dict, key, build) -> DataFrame:
-    """ONE get-or-persist with the clearCache self-heal, shared by the
-    shingle layer and q125's hashed-token frame (previously verbatim
-    copies — a fix to the self-heal guard applied to one and missed in
-    the other would silently leave the other memo uncached for the rest
-    of the app; round-12 review finding): ``clearCache()`` deregisters
-    the plan from the CacheManager, so a memoized instance found at
-    StorageLevel.NONE must re-``persist()`` or every downstream use
-    silently recomputes."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = memo.get(key)
-    if df is None:
-        df = build().persist()
-        memo[key] = df
-    elif df.storageLevel == StorageLevel.NONE:
-        df.persist()
-    return df
+    """The persisted shingle frame, one instance per (session, sf_dir)
+    while the documents part files are unchanged. ``persisted_frame``
+    re-persists it after ``spark.catalog.clearCache()`` — otherwise every
+    downstream self-join silently recomputes the HOF shingling once per
+    use (measured 4x on q31/q90 at sf0.1)."""
+    return _layer_persisted(spark, "dedup_shingles", sf_dir, lambda: _shingle_sets(spark, sf_dir))
 
 
 def materialized_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup pair frame (doc_a, doc_b, jaccard), computed once per
-    (app, dataset) and localCheckpoint-materialized for downstream reuse."""
-    key = _memo_key(spark, sf_dir)
-    df = _PAIRS_MEMO.get(key)
-    if df is None:
-        df = _materialize_accounted(spark, key, lambda: near_dup_pairs(spark, sf_dir))
-        _PAIRS_MEMO[key] = df
-    return df
+    (session, sf_dir) while the documents are unchanged and
+    localCheckpoint-materialized for downstream reuse."""
+    return _layer_checkpointed(spark, "dedup_pairs", sf_dir, lambda: near_dup_pairs(spark, sf_dir))
 
 
 def materialized_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cluster assignment (doc_id, canonical_id, is_canonical),
-    computed once per (app, dataset) and localCheckpoint-materialized."""
-    key = _memo_key(spark, sf_dir)
-    df = _CLUSTERS_MEMO.get(key)
-    if df is None:
-        df = _materialize_accounted(
-            spark,
-            key,
-            lambda: dedup_clusters(spark, sf_dir, pairs=materialized_pairs(spark, sf_dir)),
-        )
-        _CLUSTERS_MEMO[key] = df
-    return df
+    computed once per (session, sf_dir) while the documents are
+    unchanged and localCheckpoint-materialized."""
+    return _layer_checkpointed(
+        spark,
+        "dedup_clusters",
+        sf_dir,
+        lambda: dedup_clusters(spark, sf_dir, pairs=materialized_pairs(spark, sf_dir)),
+    )
 
 
 def prebuild_dedup_layer(spark: SparkSession, sf_dir: str) -> dict:
@@ -1091,7 +1011,7 @@ def q46_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     once-materialized CLUSTER frame (:func:`materialized_clusters`) —
     the same layer entry every other assignment consumer (q88, q99,
     q134, q202) reads, so the chain computes the shingle join AND the
-    iterative contraction once per (app, dataset), not once per caller
+    iterative contraction once per (session, dataset), not once per caller
     (round-10 verdict item 3: the old body re-ran the contraction's
     ~20 driver-coordinated jobs on every call — 25 jobs/2.1 s warm,
     now 1 job reading the checkpoint; the honest build cost is
@@ -1407,25 +1327,20 @@ def q125_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity dense, giving the eval a populated mid-range where
     banding probabilistically misses — a realistic recall < 1.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.where(
-            (F.col("doc_id") % _EVAL_SAMPLE_MOD == 0) & F.col("text").isNotNull()
-        )
-        .select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
-        .where(F.size("toks") >= 1)
-    )
     tok_hash = md5_prefix_int_spark("t", 7)
-    # Memoized per (app, dataset) like the shared shingle layer: a bare
+    # Kept per (session, sf_dir) like the shared shingle layer: a bare
     # per-invocation persist() stacks a fresh cache entry every bench
     # repeat (the exact leak the round-6 review fixed in
     # shared_word_kgrams), evicting the dedup family's shared frames.
-    # Same helper as shared_shingle_sets so the clearCache self-heal
-    # cannot drift between the two memo sites.
-    hashed = _memoized_persisted(
-        _EVAL_HASHED_MEMO,
-        _memo_key(spark, sf_dir),
-        lambda: sample.select(
+    hashed = _layer_persisted(
+        spark,
+        "dedup_eval_hashed",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents")
+        .where((F.col("doc_id") % _EVAL_SAMPLE_MOD == 0) & F.col("text").isNotNull())
+        .select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
+        .where(F.size("toks") >= 1)
+        .select(
             "doc_id",
             "toks",
             F.size("toks").alias("sz"),

@@ -14,10 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trafficteach_spark.registry import register
-from trafficteach_spark.sources.tables import load_table
-
-
-_HOURLY_MEMO: dict[tuple[str, str], DataFrame] = {}
+from trafficteach_spark.sources.tables import load_table, persisted_frame
 
 
 def shared_hourly_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,37 +25,25 @@ def shared_hourly_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-step pipelines into this helper so the calendar/persist
     discipline cannot drift between them.
 
-    The hourly frame is persisted as ONE memoized instance per
-    (app, dataset) — per-branch column pruning specializes each
-    consumer's partial aggregate so ReuseExchange canNOT share them
-    (the unpersisted first cut measured THREE full fact scans), and a
-    per-call persist would stack a fresh cache entry per invocation
-    (the q50/q57 leak pattern). clearCache() deregisters the plan, so
-    the memo re-persists into the same slot when that happened.
+    The hourly frame is persisted as ONE instance per (session, sf_dir),
+    kept while the events part files are unchanged (``persisted_frame``)
+    — per-branch column pruning specializes each consumer's partial
+    aggregate so ReuseExchange canNOT share them (the unpersisted first
+    cut measured THREE full fact scans), and a per-call persist would
+    stack a fresh cache entry per invocation (the q50/q57 leak pattern).
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from trafficteach_spark.session import evict_stale_memo
-
-    evict_stale_memo(_HOURLY_MEMO, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hourly = _HOURLY_MEMO.get(key)
-    if hourly is None:
-        events = load_table(spark, sf_dir, "events").select(
-            "event_type", "ts", "value"
-        )
-        hourly = (
-            events.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("value").alias("sum_value"),
-                F.avg("value").alias("avg_raw"),
-            )
-            .persist()
-        )
-        _HOURLY_MEMO[key] = hourly
-    elif hourly.storageLevel == StorageLevel.NONE:
-        hourly.persist()
+    hourly = persisted_frame(
+        spark,
+        ("hourly_grid", sf_dir),
+        lambda: load_table(spark, sf_dir, "events")
+        .select("event_type", "ts", "value")
+        .groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("value").alias("sum_value"),
+            F.avg("value").alias("avg_raw"),
+        ),
+    )
     bounds = hourly.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
     cal = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hr")

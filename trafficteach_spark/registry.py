@@ -35,14 +35,23 @@ otherwise recompute a dominant scan). The returned
 DataFrame is lazy, so the query function cannot unpersist it; long-lived
 sessions running many queries should call ``spark.catalog.clearCache()``
 between queries (perfbench and the plan tests do) — Spark's LRU eviction
-bounds the cost otherwise. Separately, the dedup chain maintains a
-MATERIALIZED layer (``operators/llm/dedup.py``: localCheckpoint'ed pair
-and cluster frames, one per (application, sf_dir)) that clearCache()
-deliberately does NOT free — those blocks are the chain's reuse
-contract and live until the application exits; their footprint is
-pair-count-sized, not corpus-sized, and since round 10 that promise is
-enforced, not assumed: every materialization is byte-accounted
-(``dedup.materialized_layer_bytes``) against a configurable cap
+bounds the cost otherwise.
+
+Operator frames that several queries share — the hourly grid (q62,
+q116), the rollup base (q101), the k-gram frame (q50, q57) and the dedup
+layer — are session frames (``sources.tables.session_frame``): one
+entry per (stage, sf_dir) held on the session object, served while the
+part files its build listed are unchanged and rebuilt after any rewrite,
+in place or with renamed parts. A ``spark.newSession()`` builds its own,
+and the frames go with their session. The persisted ones re-persist
+after clearCache(). The dedup chain's MATERIALIZED layer
+(``operators/llm/dedup.py``: localCheckpoint'ed pair and cluster frames)
+is one that clearCache() deliberately does NOT free — those blocks are
+the chain's reuse contract and live as long as their session frames;
+their footprint is pair-count-sized, not corpus-sized, and since round
+10 that promise is enforced, not assumed: every materialization is
+byte-accounted (``dedup.materialized_layer_bytes``) against a
+configurable cap on one session's layer
 ($SPARK_GRAFT_DEDUP_LAYER_CAP_BYTES) with evict-other-datasets-then-
 refuse semantics (tests/test_dedup_layer_accounting.py).
 
@@ -78,7 +87,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from trafficteach_spark.session import ensure_session_confs
-from trafficteach_spark.sources.tables import part_file_stamp, recording_stamps
+from trafficteach_spark.sources.tables import recording_stamps, stamps_hold
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -212,8 +221,10 @@ def register(key: str, oracle: OracleSrc, tags: tuple[str, ...] = ()) -> Callabl
 # on every call, even when nothing it reads has changed. prepare() keeps
 # one entry per key on the session object (like the base-table memo in
 # sources/tables.py), so the memo is bounded by the registry and goes
-# with its session: ``(sf_dir, stamps, conf text, analyzed plan)``,
-# where ``stamps`` is the part_file_stamp of every path the build listed.
+# with its session: ``(sf_dir, stamps, conf text, analyzed plan, walked)``,
+# where ``stamps`` is the part_file_stamp of every path the build listed
+# and ``walked`` says whether the plan went through :func:`_reads_only`
+# (a plan that failed it is None).
 # A hit wraps the kept plan in a new Dataset (one py4j call) rather than
 # handing out the built frame again: once run, a frame keeps its final
 # adaptive plan, finished shuffle stages and cache substitutions, and a
@@ -247,13 +258,6 @@ def _jvm_handles(spark: SparkSession):
             return None
         spark.__dict__[_JVM_ATTR] = handles
     return handles
-
-
-def _stamps_hold(stamps: dict) -> bool:
-    try:
-        return all(part_file_stamp(path) == stamp for path, stamp in stamps.items())
-    except OSError:
-        return False
 
 
 def _reads_only(plan, stamps: dict) -> bool:
@@ -297,12 +301,18 @@ def prepare(key: str, fn: QueryFn) -> QueryFn:
     """*fn* as a prepared query: a call whose inputs and session confs
     are unchanged since the last call on the same session returns a
     DataFrame over that call's analyzed plan instead of building it
-    again. Only pure plans are kept: the build started no Spark job,
+    again. Only pure plans are reused: the build started no Spark job,
     left the catalog cache empty as it found it, and reads nothing but
     stamped parquet paths and local rows (:func:`_reads_only`), so a
-    kept plan never depends on blocks that can be evicted. The conf set
-    is applied first, as every loader does, so a session switched to
-    another time zone is healed before it is compared."""
+    reused plan never depends on blocks that can be evicted. The plan
+    walk runs on the first call that matches the kept entry, not at
+    build, so a build whose inputs change before its next call (a new
+    corpus shard per pass) is never walked. An entry that fails the walk
+    drops its plan and keeps only its fingerprint, so that call and every
+    later one under the same fingerprint build afresh without walking
+    again. The conf set is applied first, as every loader does, so a
+    session switched to another time zone is healed before it is
+    compared."""
 
     @functools.wraps(fn)
     def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,18 +324,21 @@ def prepare(key: str, fn: QueryFn) -> QueryFn:
         conf_text = conf.getAllConfs().toString()
         memo = spark.__dict__.setdefault(_PREPARED_ATTR, {})
         entry = memo.pop(key, None)
-        if entry is not None and entry[0] == sf_dir and entry[2] == conf_text and _stamps_hold(entry[1]):
-            memo[key] = entry
-            return ClassicDataFrame(dataset.ofRows(spark._jsparkSession, entry[3]), spark)
+        if entry is not None and entry[0] == sf_dir and entry[2] == conf_text and stamps_hold(entry[1]):
+            _, stamps, _, plan, walked = entry
+            if not walked and not _reads_only(plan, stamps):
+                plan = None
+            memo[key] = (sf_dir, stamps, conf_text, plan, True)
+            if plan is None:
+                return fn(spark, sf_dir)
+            return ClassicDataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
         if not cache.isEmpty():
             return fn(spark, sf_dir)
         jobs = dag.numTotalJobs()
         with recording_stamps() as stamps:
             df = fn(spark, sf_dir)
         if dag.numTotalJobs() == jobs and cache.isEmpty() and None not in stamps.values():
-            plan = df._jdf.logicalPlan()
-            if _reads_only(plan, stamps):
-                memo[key] = (sf_dir, stamps, conf_text, plan)
+            memo[key] = (sf_dir, stamps, conf_text, df._jdf.logicalPlan(), False)
         return df
 
     return prepared

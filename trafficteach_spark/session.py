@@ -212,24 +212,3 @@ def get_spark(app_name: str = "trafficteach-spark", cpus: int | None = None) -> 
         builder = builder.config(key, value)
     return ensure_session_confs(builder.getOrCreate())
 
-
-def evict_stale_memo(memo: dict, spark: SparkSession) -> None:
-    """Drop memoized frames belonging to a DIFFERENT Spark application.
-
-    The operator-level materialized layers (dedup's shingle/pair/cluster
-    frames, the hourly grid, the k-gram frame) memoize DataFrames keyed
-    by ``(applicationId, sf_dir, ...)``. Entries for an application that
-    is no longer the live one pin dead lineages (and would re-persist on
-    accidental access) for the life of the process — a real leak for a
-    long-lived host iterating over sessions (round-6 advisory). Stale
-    entries are re-buildable by construction, so eviction is always
-    safe. Called by each of those module-level memos' accessors (the
-    memos held on a session object — the base-table frames and the
-    prepared queries — go with their session and do not call it);
-    current-app entries (any sf_dir) are kept — per-dataset growth
-    within one app is bounded by the handful of sf_dirs a process
-    touches.
-    """
-    app = spark.sparkContext.applicationId
-    for key in [k for k in memo if k[0] != app]:
-        del memo[key]

@@ -25,6 +25,7 @@ from contextvars import ContextVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.storagelevel import StorageLevel
 
 from trafficteach_spark import schemas
 from trafficteach_spark.session import ensure_session_confs
@@ -107,6 +108,72 @@ def _list_parts(path: str) -> tuple[tuple[str, int, int], ...]:
             if st.st_size > 0:
                 stamp.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
     return tuple(sorted(stamp))
+
+
+def stamps_hold(stamps: dict) -> bool:
+    """Whether every path in *stamps* still lists the recorded part files."""
+    try:
+        return all(part_file_stamp(path) == stamp for path, stamp in stamps.items())
+    except OSError:
+        return False
+
+
+# -- Session-held operator frames --------------------------------------------
+#
+# An operator that several queries share (the hourly grid, the rollup base,
+# the k-gram frame, the dedup layer) keeps its built frame here, one entry
+# per key on the session object: ``{key: (stamps, frame)}``. An entry is
+# served while the part files its build listed are unchanged, so a rewrite
+# of an input (in place or with renamed parts) rebuilds it; a
+# ``spark.newSession()`` builds its own, and the frames go with their
+# session, as the base-table memo below and the prepared queries do.
+
+_SESSION_FRAMES_ATTR = "_trafficteach_session_frames"
+
+
+def session_frame(spark: SparkSession, key: tuple, build, release=None):
+    """``build()`` for *key*, kept on the session while every part file
+    the build listed is unchanged.
+
+    The build runs inside :func:`recording_stamps`, so the operator need
+    not name the tables it reads: every load, and every session frame it
+    reads in turn, is part of the entry's validity. Nothing is kept when
+    the build listed no table or a listing failed or moved mid-build (a
+    None stamp). A kept value whose stamps no longer hold is handed to
+    *release* (to free its blocks) before it is dropped and rebuilt.
+    """
+    memo = spark.__dict__.setdefault(_SESSION_FRAMES_ATTR, {})
+    entry = memo.get(key)
+    if entry is not None:
+        if stamps_hold(entry[0]):
+            return entry[1]
+        if release is not None:
+            release(entry[1])
+        memo.pop(key, None)
+    with recording_stamps() as stamps:
+        value = build()
+    if stamps and None not in stamps.values():
+        memo[key] = (stamps, value)
+    return value
+
+
+def pop_session_frame(spark: SparkSession, key: tuple):
+    """Drop *key*'s kept frame from the session; returns it, or None."""
+    entry = spark.__dict__.get(_SESSION_FRAMES_ATTR, {}).pop(key, None)
+    return None if entry is None else entry[1]
+
+
+def persisted_frame(spark: SparkSession, key: tuple, build, release=None) -> DataFrame:
+    """:func:`session_frame` of ``build().persist()``: one cache slot per
+    key instead of a new persisted plan per call. ``clearCache()`` drops
+    the plan from the cache manager, so a kept frame found at
+    ``StorageLevel.NONE`` is persisted again; otherwise every consumer
+    would silently recompute it. A stale frame is unpersisted, unless
+    *release* frees it instead."""
+    df = session_frame(spark, key, lambda: build().persist(), release or (lambda old: old.unpersist()))
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist()
+    return df
 
 
 # path -> (part_file_stamp, encoding verdict)
